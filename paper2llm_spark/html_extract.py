@@ -144,30 +144,25 @@ def extract_html_markdown(data: bytes) -> str:
         rows.insert(1, "|" + " --- |" * n_cols)
         return "\n\n\x00" + "\n".join(rows) + "\x00\n\n"
 
+    def _link(m: re.Match) -> str:
+        text = _clean_inline(m.group(2))
+        href = m.group(1).strip()
+        return f"[{text}]({href})" if href and text else text
+
+    def _wrap(marker: str):
+        def sub(m: re.Match) -> str:
+            text = _clean_inline(m.group(1))
+            return f"{marker}{text}{marker}" if text else ""
+        return sub
+
     # inline conversions FIRST (their markers are plain text, so the
     # structural handlers' _clean_inline keeps them); <pre> is consumed
     # before them so code is never rewritten
     raw = _PRE_RE.sub(_pre, raw)
-    raw = _LINK_RE.sub(
-        lambda m: (
-            f"[{_clean_inline(m.group(2))}]({m.group(1).strip()})"
-            if m.group(1).strip() and _clean_inline(m.group(2))
-            else _clean_inline(m.group(2))
-        ),
-        raw,
-    )
-    raw = _STRONG_RE.sub(
-        lambda m: f"**{_clean_inline(m.group(1))}**"
-        if _clean_inline(m.group(1)) else "", raw,
-    )
-    raw = _EM_RE.sub(
-        lambda m: f"*{_clean_inline(m.group(1))}*"
-        if _clean_inline(m.group(1)) else "", raw,
-    )
-    raw = _CODE_RE.sub(
-        lambda m: f"`{_clean_inline(m.group(1))}`"
-        if _clean_inline(m.group(1)) else "", raw,
-    )
+    raw = _LINK_RE.sub(_link, raw)
+    raw = _STRONG_RE.sub(_wrap("**"), raw)
+    raw = _EM_RE.sub(_wrap("*"), raw)
+    raw = _CODE_RE.sub(_wrap("`"), raw)
 
     def _ol(m: re.Match) -> str:
         # numbered items; consumed before the generic <li> handler so

@@ -47,14 +47,18 @@ def assemble_documents(pages_df: DataFrame) -> DataFrame:
     enhancement stage's context build), has_images.
 
     A single groupBy handles both good and quarantined documents —
-    ``collect_list`` skips the NULL structs of error rows, and ``max(err)``
+    ``collect_list`` skips the NULL structs of error rows (and of the
+    no-page row of an empty document, which assembles to ``markdown ''``
+    and ``page_count`` 0 like the oracle's), and ``max(err)``
     surfaces any chunk failure for the url — so the parse subtree is
     evaluated exactly once (no second pass for errors).
     """
     per_page = pages_df.select(
         "url",
+        # quarantine rows and the no-page row of an empty document carry
+        # page_index -1: no page struct, but the url still forms a group
         F.when(
-            F.col("err").isNull(),
+            F.col("page_index") >= 0,
             F.struct(
                 F.col("page_index").alias("page_index"),
                 collapsed_markdown(F.col("page_markdown")).alias("collapsed"),

@@ -1,12 +1,14 @@
-"""Enhancement + splitting + bibtex — Arrow pandas UDFs over the oracle.
+"""Enhancement + splitting + bibtex — one per-document convert over the oracle.
 
 These are the stateful string algorithms that Spark SQL cannot express
 (SURVEY.md §2.10 "UDF surface"): first-occurrence splice with fuzzy map
 lookup (E1-E3), the boundary search with page-marker pull-in (T2-T3), and
-BibTeX assembly (B). Each UDF body *is* the oracle function — one
-implementation, two call sites — which is what makes the byte-identical
-contract hold by construction. All UDFs are vectorized over Arrow record
-batches (no per-row Python, per BASELINE.json input_hint).
+BibTeX assembly (B). :func:`convert_document` runs them on one assembled
+document and its body *is* the oracle functions — one implementation,
+every call site — which is what makes the byte-identical contract hold
+by construction. The fused document stage (operators/document.py) calls
+it per document; :func:`convert_udf` wraps it as an Arrow pandas UDF for
+the giant-document route, which reassembles in SQL.
 """
 
 from __future__ import annotations
@@ -22,254 +24,98 @@ from ..oracle.bibtex import PINNED_YEAR, generate_bibtex_from_markdown
 from ..oracle.enhance import enhance_image_references, extract_image_context
 from ..oracle.splitter import split_markdown_content
 from ..oracle.vision import deterministic_describe
-from ..schema import BIBTEX_RESULT, SECTIONS
+from ..schema import CONVERTED
+
+CONVERT_FIELDS = CONVERTED.fieldNames()
 
 
-def _enhance_placeholder(markdown: pd.Series, has_images: pd.Series) -> pd.Series:
-    """Placeholder branch (pdf-to-md.ts:125-133): every image ref becomes
-    ``> **Image.** [not displayed]`` with the spacing pass. Docs without
-    images pass through untouched (the hasImages gate, :67)."""
-    out = []
-    for md, has in zip(markdown, has_images):
-        if not has or md is None:
-            out.append(md)
-        else:
-            out.append(
-                enhance_image_references(md, {}, replace_images_with_placeholder=True)
+def convert_document(markdown, mode: str, has_images: bool, pages=()) -> dict:
+    """Assembled markdown -> the converted columns of one document.
+
+    ``pages`` is ``(page_markdown, image_ids)`` per page, in page order;
+    only the description branch reads it (the per-image context map,
+    E4). ``markdown`` None (a quarantined document) maps to all-None.
+    """
+    if markdown is None:
+        return dict.fromkeys(CONVERT_FIELDS)
+    enhanced = markdown
+    if mode == "placeholder":
+        if has_images:
+            enhanced = enhance_image_references(
+                markdown, {}, replace_images_with_placeholder=True
             )
-    return pd.Series(out)
-
-
-def _enhance_descriptions(markdown: pd.Series, pages_light: pd.Series) -> pd.Series:
-    """Description branch (pdf-to-md.ts:69-112): build the per-image
-    context map (E4) from raw page markdown, run the deterministic
-    describe substitute (V3), splice blockquote descriptions (E1-E2) and
-    fix spacing (E3)."""
-    out = []
-    for md, pages in zip(markdown, pages_light):
-        if md is None:
-            out.append(md)
-            continue
+    elif mode == "descriptions":
         descriptions: dict[str, str] = {}
-        # Arrow hands array columns to pandas as numpy arrays — no truthiness
-        for page in (pages if pages is not None else []):
-            page_md = page["page_markdown"]
-            ids = page["image_ids"]
-            for image_id in (ids if ids is not None else []):
+        for page_md, ids in pages:
+            for image_id in ids:
                 context = extract_image_context(page_md, image_id)
                 descriptions[image_id] = deterministic_describe(image_id, context)
-        if not descriptions:
-            out.append(md)
-        else:
-            out.append(enhance_image_references(md, descriptions))
-    return pd.Series(out)
+        if descriptions:
+            enhanced = enhance_image_references(markdown, descriptions)
+    else:
+        raise ValueError(f"unknown enhancement mode {mode!r}")
+    s = split_markdown_content(enhanced)
+    r = generate_bibtex_from_markdown(enhanced, now_year=PINNED_YEAR)
+    v = r["title_validation"]
+    return {
+        "markdown": enhanced,
+        "main_content": s["main_content"],
+        "backmatter": s["backmatter"],
+        "appendix": s["appendix"],
+        "title": s["title"],
+        "bibtex": r["bibtex"],
+        "bibtex_key": r["entry"]["key"],
+        "bibtex_formatted": r["formatted_entry"],
+        "title_validation": {
+            "matches": v["matches"],
+            "original_title": v["original_title"],
+            "bibtex_title": v["bibtex_title"],
+            "normalized_original": v["normalized_original"],
+            "normalized_bibtex": v["normalized_bibtex"],
+        },
+    }
 
 
-def _split_sections(markdown: pd.Series) -> pd.DataFrame:
-    """T1-T3: title + boundary search + split (markdown-splitter.ts)."""
-    rows = []
-    for md in markdown:
-        if md is None:
-            rows.append({"main_content": None, "backmatter": None,
-                         "appendix": None, "title": None})
-            continue
-        s = split_markdown_content(md)
-        rows.append({
-            "main_content": s["main_content"],
-            "backmatter": s["backmatter"],
-            "appendix": s["appendix"],
-            "title": s["title"],
-        })
-    return pd.DataFrame(rows, columns=["main_content", "backmatter", "appendix", "title"])
-
-
-def _bibtex(markdown: pd.Series) -> pd.DataFrame:
-    """B-chain (bibtex-generator.ts) via the deterministic mock path:
-    ``bibtex`` is ``""`` (the :534 quirk), the formatted entry and
-    validation struct are populated."""
-    rows = []
-    for md in markdown:
-        if md is None:
-            rows.append({"bibtex": None, "bibtex_key": None,
-                         "bibtex_formatted": None, "title_validation": None})
-            continue
-        r = generate_bibtex_from_markdown(md, now_year=PINNED_YEAR)
-        v = r["title_validation"]
-        rows.append({
-            "bibtex": r["bibtex"],
-            "bibtex_key": r["entry"]["key"],
-            "bibtex_formatted": r["formatted_entry"],
-            "title_validation": {
-                "matches": v["matches"],
-                "original_title": v["original_title"],
-                "bibtex_title": v["bibtex_title"],
-                "normalized_original": v["normalized_original"],
-                "normalized_bibtex": v["normalized_bibtex"],
-            },
-        })
+def _convert_placeholder(markdown: pd.Series, has_images: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(
-        rows, columns=["bibtex", "bibtex_key", "bibtex_formatted", "title_validation"]
+        [convert_document(md, "placeholder", has) for md, has in zip(markdown, has_images)],
+        columns=CONVERT_FIELDS,
     )
 
 
-def enhanced_markdown(mode: str) -> Column:
-    """Column factory for the enhancement stage; ``mode`` in
-    {'placeholder', 'descriptions'} (the web app's two branches)."""
-    if mode == "placeholder":
-        return enhance_placeholder_udf()(F.col("markdown"), F.col("has_images"))
-    if mode == "descriptions":
-        return F.when(
-            F.col("has_images"),
-            enhance_descriptions_udf()(F.col("markdown"), F.col("pages_light")),
-        ).otherwise(F.col("markdown"))
-    raise ValueError(f"unknown enhancement mode {mode!r}")
+def _convert_descriptions(markdown: pd.Series, pages_light: pd.Series) -> pd.DataFrame:
+    def page_images(pages):
+        # Arrow hands array columns to pandas as numpy arrays — no truthiness
+        return [
+            (p["page_markdown"], p["image_ids"] if p["image_ids"] is not None else [])
+            for p in (pages if pages is not None else [])
+        ]
+
+    return pd.DataFrame(
+        [
+            convert_document(md, "descriptions", True, page_images(pages))
+            for md, pages in zip(markdown, pages_light)
+        ],
+        columns=CONVERT_FIELDS,
+    )
 
 
 # pandas_udf() needs an active SparkSession to resolve return types, so the
 # UDF objects are created lazily (and cached) at first use.
 
 @functools.lru_cache(maxsize=None)
-def enhance_placeholder_udf():
-    return pandas_udf(_enhance_placeholder, "string")
-
-
-@functools.lru_cache(maxsize=None)
-def enhance_descriptions_udf():
-    return pandas_udf(_enhance_descriptions, "string")
-
-
-@functools.lru_cache(maxsize=None)
-def split_sections_udf_fn():
-    return pandas_udf(_split_sections, SECTIONS)
-
-
-@functools.lru_cache(maxsize=None)
-def bibtex_udf_fn():
-    return pandas_udf(_bibtex, BIBTEX_RESULT)
-
-
-def split_sections_udf(col: Column) -> Column:
-    return split_sections_udf_fn()(col)
-
-
-def bibtex_udf(col: Column) -> Column:
-    return bibtex_udf_fn()(col)
-
-
-# ---------------------------------------------------------------------------
-# combined single-pass stage (enhance -> split -> bibtex in ONE Arrow hop)
-# ---------------------------------------------------------------------------
-#
-# Chaining the three UDFs puts the multi-MB enhanced-markdown string
-# across the Python<->JVM Arrow boundary three times (out of the enhance
-# runner, back into the split+bibtex runner, results out again). The
-# combined UDF ships the markdown in once and one result struct out —
-# the dominant per-doc payload crosses exactly twice in total. The
-# separate UDFs above stay for operator-level tests; this struct is what
-# the pipeline plan uses.
-
-def _convert_batch(markdown, descriptions_fn):
-    rows = []
-    for md, desc in zip(markdown, descriptions_fn):
-        if md is None:
-            rows.append({
-                "markdown": None, "main_content": None, "backmatter": None,
-                "appendix": None, "title": None, "bibtex": None,
-                "bibtex_key": None, "bibtex_formatted": None,
-                "title_validation": None,
-            })
-            continue
-        enhanced = desc(md)
-        s = split_markdown_content(enhanced)
-        r = generate_bibtex_from_markdown(enhanced, now_year=PINNED_YEAR)
-        v = r["title_validation"]
-        rows.append({
-            "markdown": enhanced,
-            "main_content": s["main_content"],
-            "backmatter": s["backmatter"],
-            "appendix": s["appendix"],
-            "title": s["title"],
-            "bibtex": r["bibtex"],
-            "bibtex_key": r["entry"]["key"],
-            "bibtex_formatted": r["formatted_entry"],
-            "title_validation": {
-                "matches": v["matches"],
-                "original_title": v["original_title"],
-                "bibtex_title": v["bibtex_title"],
-                "normalized_original": v["normalized_original"],
-                "normalized_bibtex": v["normalized_bibtex"],
-            },
-        })
-    return pd.DataFrame(rows, columns=[
-        "markdown", "main_content", "backmatter", "appendix", "title",
-        "bibtex", "bibtex_key", "bibtex_formatted", "title_validation",
-    ])
-
-
-def _convert_placeholder(markdown: pd.Series, has_images: pd.Series) -> pd.DataFrame:
-    def enhancer(has):
-        def fn(md):
-            if not has:
-                return md
-            return enhance_image_references(
-                md, {}, replace_images_with_placeholder=True
-            )
-        return fn
-
-    return _convert_batch(markdown, (enhancer(h) for h in has_images))
-
-
-def _convert_descriptions(markdown: pd.Series, pages_light: pd.Series) -> pd.DataFrame:
-    def enhancer(pages):
-        def fn(md):
-            descriptions: dict[str, str] = {}
-            for page in (pages if pages is not None else []):
-                page_md = page["page_markdown"]
-                ids = page["image_ids"]
-                for image_id in (ids if ids is not None else []):
-                    context = extract_image_context(page_md, image_id)
-                    descriptions[image_id] = deterministic_describe(image_id, context)
-            if not descriptions:
-                return md
-            return enhance_image_references(md, descriptions)
-        return fn
-
-    return _convert_batch(markdown, (enhancer(p) for p in pages_light))
-
-
-@functools.lru_cache(maxsize=None)
-def _convert_result_type():
-    from pyspark.sql import types as T
-
-    from ..schema import TITLE_VALIDATION
-
-    return T.StructType(
-        [
-            T.StructField("markdown", T.StringType()),
-            T.StructField("main_content", T.StringType()),
-            T.StructField("backmatter", T.StringType()),
-            T.StructField("appendix", T.StringType()),
-            T.StructField("title", T.StringType()),
-            T.StructField("bibtex", T.StringType()),
-            T.StructField("bibtex_key", T.StringType()),
-            T.StructField("bibtex_formatted", T.StringType()),
-            T.StructField("title_validation", TITLE_VALIDATION),
-        ]
-    )
-
-
-@functools.lru_cache(maxsize=None)
 def convert_placeholder_udf():
-    return pandas_udf(_convert_placeholder, _convert_result_type())
+    return pandas_udf(_convert_placeholder, CONVERTED)
 
 
 @functools.lru_cache(maxsize=None)
 def convert_descriptions_udf():
-    return pandas_udf(_convert_descriptions, _convert_result_type())
+    return pandas_udf(_convert_descriptions, CONVERTED)
 
 
 def convert_udf(mode: str) -> Column:
-    """Single-hop enhance+split+bibtex result struct for the pipeline."""
+    """Single-hop enhance+split+bibtex result struct over assembled
+    documents (the giant-document route of plans/extract.py)."""
     if mode == "placeholder":
         return convert_placeholder_udf()(F.col("markdown"), F.col("has_images"))
     if mode == "descriptions":

@@ -1,7 +1,8 @@
 """Parse stage — S4 replacement: binary payload -> page rows.
 
-Two ``mapInPandas`` stages with an explicit repartition between them (the
-skew-control shuffle, SURVEY.md §3.4 / §4 "Skew: giant PDFs"):
+The per-page route of the giant-document (skew) path, SURVEY.md §3.4 /
+§4 "Skew: giant PDFs": two ``mapInPandas`` stages with an explicit
+by-number repartition between them:
 
 1. :func:`plan_chunks` — cheap page-count scan; documents above
    ``chunk_pages`` split into page-range chunk rows. AQE cannot see skew
@@ -10,6 +11,11 @@ skew-control shuffle, SURVEY.md §3.4 / §4 "Skew: giant PDFs"):
 2. :func:`parse_chunks` — the real parse (PDF layout parse or HTML
    boilerplate strip) producing one row per page, carrying per-partition
    lineage measurements (partition id, wall ms, bytes in).
+
+The pipeline (plans/extract.py) sends every other document through the
+fused document stage (operators/document.py) instead, which parses and
+converts in one Python pass; :func:`parse_pages` keeps both routes at
+page granularity for per-layer measurement.
 
 Parse failures become ``err`` rows (quarantine, S6 semantics:
 ocr-service.ts:468-532 maps errors to values instead of crashing the
@@ -35,7 +41,9 @@ DEFAULT_CHUNK_PAGES = 16
 
 def plan_chunks(df: DataFrame, chunk_pages: int = DEFAULT_CHUNK_PAGES) -> DataFrame:
     """(url, kind, html) -> chunk rows; page_lo/page_hi inclusive, or
-    (0, -1) meaning "whole document" (html / small pdf).
+    (0, -1) meaning "whole document" (html / small pdf). ``bytes_in`` is
+    the whole document's payload size on every chunk row, so lineage
+    reads the same whichever route a document took.
 
     Split documents emit BYTE-SLICED chunk payloads (kind ``pdf_slice``,
     pdf.slicer): each chunk row carries only its own pages' objects, so
@@ -52,23 +60,25 @@ def plan_chunks(df: DataFrame, chunk_pages: int = DEFAULT_CHUNK_PAGES) -> DataFr
         for pdf_batch in batches:
             out: dict[str, list[Any]] = {
                 "url": [], "kind": [], "page_lo": [], "page_hi": [],
-                "n_pages": [], "html": [],
+                "n_pages": [], "html": [], "bytes_in": [],
             }
 
-            def emit(url, kind, lo, hi, n, payload):
+            def emit(url, kind, lo, hi, n, chunk, nbytes):
                 out["url"].append(url)
                 out["kind"].append(kind)
                 out["page_lo"].append(lo)
                 out["page_hi"].append(hi)
                 out["n_pages"].append(n)
-                out["html"].append(payload)
+                out["html"].append(chunk)
+                out["bytes_in"].append(nbytes)
 
             for url, kind, payload in zip(
                 pdf_batch["url"], pdf_batch["kind"], pdf_batch["html"]
             ):
                 payload = bytes(payload)
+                nbytes = len(payload)
                 if kind != "pdf":
-                    emit(url, kind, 0, -1, 1, payload)
+                    emit(url, kind, 0, -1, 1, payload, nbytes)
                     continue
                 try:
                     n = count_pages(payload)
@@ -85,11 +95,11 @@ def plan_chunks(df: DataFrame, chunk_pages: int = DEFAULT_CHUNK_PAGES) -> DataFr
                             if slicer is None:
                                 raise ValueError("unsliceable payload")
                             emit(url, "pdf_slice", lo, hi, n,
-                                 slicer.slice(lo, hi))
+                                 slicer.slice(lo, hi), nbytes)
                         except Exception:
-                            emit(url, kind, lo, hi, n, payload)
+                            emit(url, kind, lo, hi, n, payload, nbytes)
                 else:
-                    emit(url, kind, 0, -1, n, payload)
+                    emit(url, kind, 0, -1, n, payload, nbytes)
             yield pd.DataFrame(out)
 
     return df.select("url", "kind", "html").mapInPandas(gen, schema=CHUNK_ROW)
@@ -97,7 +107,11 @@ def plan_chunks(df: DataFrame, chunk_pages: int = DEFAULT_CHUNK_PAGES) -> DataFr
 
 def parse_chunks(df: DataFrame) -> DataFrame:
     """Chunk rows -> page rows (PAGE_ROW schema). Pure function of the
-    payload; task retries are safe (idempotent stage, SURVEY.md §4)."""
+    payload; task retries are safe (idempotent stage, SURVEY.md §4).
+
+    A document that parses to no pages (a PDF whose ``/Kids`` is empty)
+    emits one row with ``page_index`` -1 and no ``err``, so the url
+    survives reassembly as the oracle's empty document."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
@@ -108,12 +122,21 @@ def parse_chunks(df: DataFrame) -> DataFrame:
         for pdf_batch in batches:
             t0 = time.monotonic()
             rows: list[dict[str, Any]] = []
-            for url, kind, lo, hi, payload in zip(
+
+            def no_page(url, nbytes, model, err):
+                rows.append({
+                    "url": url, "page_index": -1, "page_markdown": None,
+                    "images": None, "dimensions": None, "model": model,
+                    "err": err, "bytes_in": nbytes,
+                    "parse_partition": partition_id, "parse_wall_ms": 0,
+                })
+
+            for url, kind, lo, hi, payload, nbytes in zip(
                 pdf_batch["url"], pdf_batch["kind"], pdf_batch["page_lo"],
-                pdf_batch["page_hi"], pdf_batch["html"],
+                pdf_batch["page_hi"], pdf_batch["html"], pdf_batch["bytes_in"],
             ):
                 payload = bytes(payload)
-                nbytes = len(payload)
+                nbytes = int(nbytes)
                 try:
                     if kind == "html":
                         ocr = html_to_ocr_result(payload)
@@ -126,14 +149,10 @@ def parse_chunks(df: DataFrame) -> DataFrame:
                     else:
                         ocr = parse_pdf(payload)
                 except Exception as exc:  # quarantine (S6)
-                    rows.append({
-                        "url": url, "page_index": -1, "page_markdown": None,
-                        "images": None, "dimensions": None, "model": None,
-                        "err": f"{type(exc).__name__}: {exc}",
-                        "bytes_in": nbytes, "parse_partition": partition_id,
-                        "parse_wall_ms": 0,
-                    })
+                    no_page(url, nbytes, None, f"{type(exc).__name__}: {exc}")
                     continue
+                if not ocr["pages"] and hi < 0:
+                    no_page(url, nbytes, ocr["model"], None)
                 for page in ocr["pages"]:
                     rows.append({
                         "url": url,
@@ -158,28 +177,49 @@ def parse_chunks(df: DataFrame) -> DataFrame:
 DEFAULT_GIANT_BYTES = 2_000_000
 
 
+def chunked_pages(
+    df: DataFrame,
+    chunk_pages: int = DEFAULT_CHUNK_PAGES,
+    spread_partitions: int | None = None,
+) -> DataFrame:
+    """Page rows of the per-page route, for the documents routed to it
+    (giant payloads): the page-range planner, then an explicit spread
+    repartition on (url, page_lo) so one 2000-page PDF doesn't pin a
+    single task — AQE can't see skew inside a UDF, so this split is
+    explicit (SURVEY.md §4).
+
+    The SQL-only ``repartition("url")`` on the input ends the scan stage
+    before any Python node, so scan tasks start no Python worker; with
+    no document routed here AQE coalesces that exchange to zero
+    partitions and the planner stage runs no task. The spread is a
+    repartition BY NUMBER (default: the context's ``defaultParallelism``),
+    which AQE never coalesces — a by-column repartition of a few MB of
+    chunks collapses into one task. The price: with no document routed
+    here the spread's ``spread_partitions`` empty tasks still start
+    Python workers.
+    """
+    chunks = plan_chunks(df.repartition("url"), chunk_pages)
+    if spread_partitions is None:
+        spread_partitions = df.sparkSession.sparkContext.defaultParallelism
+    return parse_chunks(chunks.repartition(spread_partitions, "url", "page_lo"))
+
+
 def parse_pages(
     df: DataFrame,
     chunk_pages: int = DEFAULT_CHUNK_PAGES,
     spread_partitions: int | None = None,
     giant_bytes: int = DEFAULT_GIANT_BYTES,
 ) -> DataFrame:
-    """Size-gated two-path parse stage.
+    """Size-gated two-path parse stage, one row per page.
 
     * **Small documents** (payload <= ``giant_bytes``, the overwhelming
-      majority) parse directly — ONE Python pass, no payload shuffle.
-      Shuffling 100 TB of payloads to "balance" work that is already
-      embarrassingly parallel would be the classic self-inflicted
-      bottleneck.
-    * **Giant documents** (heavy tail) go through the page-range planner
-      and an explicit spread repartition on (url, page_lo) so one
-      2000-page PDF doesn't pin a single task — AQE can't see skew
-      inside a UDF, so this split is explicit (SURVEY.md §4).
+      majority) parse directly — no payload shuffle.
+    * **Giant documents** (heavy tail) go through :func:`chunked_pages`.
 
     The gate is a pure SQL predicate (``octet_length``), so Catalyst
-    pushes it into both branch scans; the giant branch re-reads only the
-    tail. Page indexes stay document-absolute either way, making the
-    reassembly sort identical across paths (tested byte-identical).
+    pushes it into both branch scans. Page indexes stay
+    document-absolute either way, making the reassembly sort identical
+    across paths (tested byte-identical).
     """
     small = df.filter(F.octet_length("html") <= giant_bytes).select(
         "url",
@@ -188,11 +228,9 @@ def parse_pages(
         F.lit(-1).alias("page_hi"),
         F.lit(-1).alias("n_pages"),
         "html",
+        F.octet_length("html").cast("long").alias("bytes_in"),
     )
     giant = df.filter(F.octet_length("html") > giant_bytes)
-    chunks = plan_chunks(giant, chunk_pages)
-    if spread_partitions:
-        chunks = chunks.repartition(spread_partitions, "url", "page_lo")
-    else:
-        chunks = chunks.repartition("url", "page_lo")
-    return parse_chunks(small).unionByName(parse_chunks(chunks))
+    return parse_chunks(small).unionByName(
+        chunked_pages(giant, chunk_pages, spread_partitions)
+    )

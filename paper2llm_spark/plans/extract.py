@@ -1,13 +1,22 @@
 """End-to-end extraction pipeline (C1) + checkpoint/resume (C4) + lineage (C2).
 
-The linear DAG of SURVEY.md §3.4::
+The DAG (SURVEY.md §3.4), two routes by payload size::
 
     scan(pages) -> anti-join checkpoint -> lang/payload filter
-      -> chunk-plan + spread (shuffle #1, explicit skew control)
-      -> mapInPandas parse -> per-page SQL ops (narrow)
-      -> groupBy(url) sorted collect_list (shuffle #2)
-      -> assemble (SQL) -> enhance (pUDF) -> split (pUDF) -> bibtex (pUDF)
-      -> write output + lineage + checkpoint commit
+      |- octet_length(html) <= giant_bytes (all but the heavy tail):
+      |    fused document stage, ONE mapInPandas (operators/document.py):
+      |    parse -> assemble -> enhance -> split -> bibtex, no shuffle
+      '- octet_length(html) > giant_bytes (giant PDFs), or a url on more
+         than one row (merged into one document, as the groupBy always did):
+           repartition(url) (SQL only: the scan stage runs no Python)
+           -> chunk-plan -> spread repartition(n, url, page_lo)
+           -> mapInPandas parse -> per-page SQL ops (narrow)
+           -> groupBy(url) sorted collect_list (reassembly shuffle)
+           -> assemble (SQL) -> convert pUDF (enhance+split+bibtex)
+      -> union -> write output + lineage + checkpoint commit
+
+Both routes convert through ``operators.enhance.convert_document``, so
+they are byte-identical by construction (tested column by column).
 
 Resumability: documents hash into ``n_buckets`` by url; buckets are
 processed in ``n_groups`` commit groups. Each group appends its output,
@@ -28,8 +37,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.assemble import assemble_documents
-from ..operators.enhance import convert_udf
-from ..operators.parse import DEFAULT_CHUNK_PAGES, parse_pages
+from ..operators.document import DOCUMENT_COLUMNS, convert_payloads
+from ..operators.enhance import CONVERT_FIELDS, convert_udf
+from ..operators.parse import DEFAULT_CHUNK_PAGES, DEFAULT_GIANT_BYTES, chunked_pages
 from ..schema import CHECKPOINT
 from ..sources.pages import read_pages, select_extractable, with_bucket
 
@@ -54,37 +64,30 @@ def extract_documents(
     Pure transformation — no writes; reusable by tests, the driver entry
     and the checkpointed runner below.
     """
+    if giant_bytes is None:
+        giant_bytes = DEFAULT_GIANT_BYTES
     selected = select_extractable(pages, langs=langs)
-    parse_kwargs = {} if giant_bytes is None else {"giant_bytes": giant_bytes}
-    page_rows = parse_pages(selected, chunk_pages, spread_partitions, **parse_kwargs)
-    docs = assemble_documents(page_rows)
-
-    # quarantined rows carry err != null and null markdown; the UDF passes
-    # None through, so one linear plan serves both outcomes. The combined
-    # convert stage runs enhance -> split -> bibtex in ONE Arrow hop: the
-    # multi-MB markdown crosses Python<->JVM twice total instead of the
-    # 3+ crossings three chained UDFs would cost (operators/enhance.py).
-    docs = docs.withColumn("res", convert_udf(mode))
-
-    return docs.select(
-        "url",
-        F.col("res.markdown").alias("markdown"),
-        F.col("res.main_content").alias("main_content"),
-        F.col("res.backmatter").alias("backmatter"),
-        F.col("res.appendix").alias("appendix"),
-        F.col("res.title").alias("title"),
-        "page_count",
-        "image_references",
-        "model",
-        F.col("res.bibtex").alias("bibtex"),
-        F.col("res.bibtex_key").alias("bibtex_key"),
-        F.col("res.bibtex_formatted").alias("bibtex_formatted"),
-        F.col("res.title_validation").alias("title_validation"),
-        "err",
-        "bytes_in",
-        "parse_partition",
-        "parse_wall_ms",
+    # a url on more than one row takes the per-page route too, whose
+    # groupBy(url) keeps the output at one row per url; finding those urls
+    # scans only the url/lang columns, and the broadcast leaves every
+    # other row's payload where the scan put it
+    repeated = (
+        pages.filter(F.col("lang").isin(*langs)).groupBy("url").count()
+        .filter(F.col("count") > 1).select("url", F.lit(True).alias("repeated"))
     )
+    routed = selected.join(F.broadcast(repeated), "url", "left")
+    per_page = F.col("repeated").isNotNull() | (F.octet_length("html") > giant_bytes)
+    small = convert_payloads(routed.filter(~per_page), mode)
+
+    # per-page route: quarantined rows carry err != null and null markdown;
+    # the UDF passes None through, so one linear plan serves both outcomes
+    docs = assemble_documents(
+        chunked_pages(routed.filter(per_page), chunk_pages, spread_partitions)
+    )
+    docs = docs.withColumn("res", convert_udf(mode))
+    converted = {c: F.col(f"res.{c}").alias(c) for c in CONVERT_FIELDS}
+    giant = docs.select(*(converted.get(c, c) for c in DOCUMENT_COLUMNS))
+    return small.unionByName(giant)
 
 
 class _StageMetricsListener:

@@ -29,8 +29,8 @@ PAGE_DIMENSIONS = T.StructType(
     ]
 )
 
-# one row per parsed page — the unit of parallelism between the parse
-# stage and the groupBy-sort reassembly (shuffle #2 of SURVEY.md §3.4)
+# one row per parsed page of a giant document — the unit of parallelism
+# between the range parse and the groupBy-sort reassembly (SURVEY.md §3.4)
 PAGE_ROW = T.StructType(
     [
         T.StructField("url", T.StringType(), False),
@@ -55,6 +55,7 @@ CHUNK_ROW = T.StructType(
         T.StructField("page_hi", T.IntegerType()),
         T.StructField("n_pages", T.IntegerType()),
         T.StructField("html", T.BinaryType()),
+        T.StructField("bytes_in", T.LongType()),
     ]
 )
 
@@ -68,21 +69,36 @@ TITLE_VALIDATION = T.StructType(
     ]
 )
 
-SECTIONS = T.StructType(
+# enhance -> split -> bibtex result of one assembled document
+# (operators/enhance.convert_document)
+CONVERTED = T.StructType(
     [
+        T.StructField("markdown", T.StringType()),
         T.StructField("main_content", T.StringType()),
         T.StructField("backmatter", T.StringType()),
         T.StructField("appendix", T.StringType()),
         T.StructField("title", T.StringType()),
-    ]
-)
-
-BIBTEX_RESULT = T.StructType(
-    [
         T.StructField("bibtex", T.StringType()),
         T.StructField("bibtex_key", T.StringType()),
         T.StructField("bibtex_formatted", T.StringType()),
         T.StructField("title_validation", TITLE_VALIDATION),
+    ]
+)
+
+# one extracted document: the output row of plans/extract.extract_documents,
+# emitted directly by the fused document stage (operators/document.py)
+DOCUMENT_ROW = T.StructType(
+    [
+        T.StructField("url", T.StringType(), False),
+        *CONVERTED.fields[:5],
+        T.StructField("page_count", T.IntegerType()),
+        T.StructField("image_references", T.ArrayType(T.StringType())),
+        T.StructField("model", T.StringType()),
+        *CONVERTED.fields[5:],
+        T.StructField("err", T.StringType()),
+        T.StructField("bytes_in", T.LongType()),
+        T.StructField("parse_partition", T.IntegerType()),
+        T.StructField("parse_wall_ms", T.LongType()),
     ]
 )
 

@@ -73,23 +73,82 @@ def test_exact_dedup_single_shuffle_with_partial_agg(spark):
     assert plan.count("hashpartitioning") <= 2  # one logical shuffle (+AQE reuse)
 
 
+def _plan_tree(jplan) -> tuple[str, list]:
+    """(one-line node string, children) of a JVM physical plan; an
+    adaptive plan is read through its not-yet-executed physical plan."""
+    if jplan.nodeName() == "AdaptiveSparkPlan":
+        jplan = jplan.executedPlan()
+    kids = jplan.children()
+    return jplan.simpleString(100), [_plan_tree(kids.apply(i)) for i in range(kids.size())]
+
+
+def _walk(node):
+    yield node[0]
+    for child in node[1]:
+        yield from _walk(child)
+
+
+def _probe_chain(node) -> tuple[list[str], list]:
+    """Node strings from ``node`` down to its leaf scan, following the
+    probe side of broadcast joins (a branch of the union is otherwise
+    linear), and the broadcast build subtrees met on the way."""
+    chain, builds = [node[0]], []
+    while node[1]:
+        builds += [k for k in node[1] if k[0].startswith("BroadcastExchange")]
+        probe = [k for k in node[1] if not k[0].startswith("BroadcastExchange")]
+        assert len(probe) == 1, chain
+        node = probe[0]
+        chain.append(node[0])
+    return chain, builds
+
+
+def _is_python(line: str) -> bool:
+    return line.startswith(("MapInPandas", "ArrowEvalPython", "BatchEvalPython"))
+
+
 def test_assemble_is_single_shuffle(spark, pages_path):
-    """scan -> parse -> groupBy(url): the only hash exchange in the
-    HTML-only pipeline is the reassembly on url (shuffle #2 of SURVEY
-    §3.4); everything after is narrow."""
+    """Two routes under one union. Non-giant documents: scan -> filter ->
+    ONE MapInPandas (the fused document stage), no shuffle, no other
+    Python node. Giant documents: a SQL-only repartition below their
+    first Python node (so their scan stage starts no Python worker), a
+    by-number spread repartition (AQE never coalesces it), and the
+    groupBy(url) reassembly — the only ENSURE_REQUIREMENTS exchange on
+    either route. The repeated-url set both routes join is broadcast,
+    SQL only, and never reads the payload column."""
     out = extract_documents(spark.read.parquet(pages_path))
-    plan = _physical(out)
+    tree = _plan_tree(out._jdf.queryExecution().executedPlan())
+    assert tree[0].startswith("Union") and len(tree[1]) == 2, tree[0]
+    small = next(
+        b for b in tree[1] if any("octet_length(html" in s and " <= " in s for s in _walk(b))
+    )
+    giant = next(b for b in tree[1] if b is not small)
+
+    small_chain, small_builds = _probe_chain(small)
+    assert [s.split()[0] for s in small_chain if _is_python(s)] == ["MapInPandas"], small_chain
+    assert not any(s.startswith("Exchange") for s in small_chain), small_chain
+
+    # leaf (scan) upwards: the first exchange comes before the first Python node
+    giant_chain, giant_builds = _probe_chain(giant)
+    giant_up = giant_chain[::-1]
+    first_exchange = next(i for i, s in enumerate(giant_up) if s.startswith("Exchange"))
+    first_python = next(i for i, s in enumerate(giant_up) if _is_python(s))
+    assert first_exchange < first_python, giant_up
+    assert "REPARTITION_BY_COL" in giant_up[first_exchange], giant_up[first_exchange]
+    spread = [s for s in giant_up if s.startswith("Exchange") and "page_lo" in s]
+    assert len(spread) == 1 and "REPARTITION_BY_NUM" in spread[0], spread
+
     implicit = [
-        line for line in plan.splitlines()
-        if "Exchange" in line and "ENSURE_REQUIREMENTS" in line
+        s for s in small_chain + giant_chain
+        if s.startswith("Exchange") and "ENSURE_REQUIREMENTS" in s
     ]
     assert len(implicit) == 1 and "hashpartitioning(url" in implicit[0], implicit
-    # the only other exchange is the explicit giant-PDF spread (skew control)
-    explicit = [
-        line for line in plan.splitlines()
-        if "Exchange" in line and "ENSURE_REQUIREMENTS" not in line
-    ]
-    assert all("page_lo" in line for line in explicit), explicit
+    reassembly = giant_up.index(implicit[0])
+    assert reassembly > giant_up.index(spread[0]), giant_up
+
+    builds = [s for b in small_builds + giant_builds for s in _walk(b)]
+    assert builds and not any(_is_python(s) for s in builds), builds
+    scans = [s for s in builds if s.startswith("FileScan")]
+    assert scans and not any("html" in s for s in scans), scans
 
 
 def test_ivf_join_is_equi_join_not_cartesian(spark):

@@ -7,9 +7,17 @@ corpus"; target 100% of urls, both branches.
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
+from paper2llm_spark.oracle.pipeline import convert_ocr_result
 from paper2llm_spark.pdf.fixtures import fixture_docs, golden_outputs
+from paper2llm_spark.pdf.parser import parse_pdf
+from paper2llm_spark.pdf.writer import write_pdf
 from paper2llm_spark.plans.extract import extract_documents
+
+# lineage measurements of the run itself (task partition, batch wall),
+# not of the document: the only columns two routes may disagree on
+RUN_LINEAGE = ("parse_partition", "parse_wall_ms")
 
 
 def _collect_results(spark, fixture_pages_path, mode):
@@ -86,6 +94,67 @@ def test_skew_split_byte_identical(spark, fixture_pages_path):
     split4 = extract_documents(pages, chunk_pages=4, giant_bytes=0).collect()[0]
     assert whole["markdown"] == split4["markdown"]
     assert whole["page_count"] == split4["page_count"] == 40
+
+
+@pytest.mark.parametrize("mode", ["placeholder", "descriptions"])
+def test_routes_agree_on_every_column(spark, fixture_pages_path, mode):
+    """The fused document stage (default routing: every fixture is below
+    ``giant_bytes``) and the chunk route (``giant_bytes=0``: plan,
+    spread, per-page parse, SQL reassembly, convert UDF) emit the same
+    row for every url, column by column — quarantine rows included."""
+    pages = spark.read.parquet(fixture_pages_path)
+
+    def rows(**kwargs):
+        out = extract_documents(pages, mode=mode, chunk_pages=16, **kwargs)
+        return {r["url"]: r.asDict(recursive=True) for r in out.collect()}
+
+    fused, chunked = rows(), rows(giant_bytes=0)
+    assert set(fused) == set(chunked)
+    diffs = [
+        (url, col, value, chunked[url][col])
+        for url, row in fused.items()
+        for col, value in row.items()
+        if col not in RUN_LINEAGE and value != chunked[url][col]
+    ]
+    assert not diffs, diffs[:3]
+
+
+def test_repeated_url_yields_one_row(spark, fixture_pages_path):
+    """A url on more than one input row (a re-crawl) still yields one
+    output row: such urls take the per-page route, whose groupBy(url)
+    merges them, instead of one fused row per input row."""
+    pages = spark.read.parquet(fixture_pages_path)
+    repeated = pages.filter(F.col("url").isin(
+        "https://fixtures.test/html/w1",
+        "https://fixtures.test/assemble/a1",
+        "https://fixtures.test/error/x1",
+    ))
+    urls = [r["url"] for r in extract_documents(pages.unionByName(repeated)).collect()]
+    assert len(urls) == len(set(urls))
+    assert set(urls) == {r["url"] for r in extract_documents(pages).collect()}
+
+
+@pytest.mark.parametrize("giant_bytes", [None, 0], ids=["fused", "chunked"])
+def test_zero_page_pdf_emits_oracle_row(spark, giant_bytes):
+    """A PDF whose ``/Pages`` has ``/Kids []`` parses to no pages; the
+    oracle still emits its document (empty markdown, page_count 0), so
+    both routes must too instead of dropping the url."""
+    payload = write_pdf([])
+    pages = spark.createDataFrame(
+        [("https://t/zero-pages", None, bytearray(payload), "", "en")],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    )
+    rows = extract_documents(pages, giant_bytes=giant_bytes).collect()
+    assert len(rows) == 1
+    got = rows[0].asDict(recursive=True)
+    golden = convert_ocr_result(parse_pdf(payload))
+    assert got["err"] is None
+    assert got["bytes_in"] == len(payload)
+    assert got["title_validation"] == golden["bibtex_title_validation"]
+    for col in ("markdown", "main_content", "backmatter", "appendix", "title",
+                "page_count", "image_references", "model", "bibtex",
+                "bibtex_key", "bibtex_formatted"):
+        assert got[col] == golden[col], col
 
 
 def test_all_en_parsable_urls_present(placeholder_results):
