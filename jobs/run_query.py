@@ -1,7 +1,8 @@
 #!/usr/bin/env python
-"""spark-submit entry for ANY registered analytics query.
+"""spark-submit entry for ANY registered driver query.
 
-Every operator in the engine is exposed in the driver registry
+The reference operators, the WARC source, the WET/WAT sinks and the
+extraction pipeline are exposed in the driver registry
 (`__spark_entry__.queries()`); this job runs one by name over a
 testdata-shaped directory of parquet tables and writes (or shows) the
 result — so a user can run every query the engine supports without
@@ -10,12 +11,12 @@ writing code.
 Cluster:
 
     spark-submit --py-files paper2llm_spark.zip,__spark_entry__.py \
-        jobs/run_query.py --query dedup_lsh_clusters \
+        jobs/run_query.py --query ref_bibtex_key \
         --sf-dir <tables dir> --output <parquet dir>
 
 Local smoke:
 
-    python jobs/run_query.py --query text_quality_score \
+    python jobs/run_query.py --query ref_word_count \
         --sf-dir /root/testdata/sf0.01 --cpus 8
 
     python jobs/run_query.py --list

@@ -1,18 +1,22 @@
 """Reference scalar operators (SURVEY.md §2) as driver-checkable queries.
 
 Each query synthesizes its input column deterministically from the
-``documents`` table IN SQL (both engines build the identical string), then
-applies the Spark Column twin from ``functions.refcols`` with a DuckDB
+``documents`` table (A1: ``events``) IN SQL (both engines build the
+identical string), then applies the Spark Column twin from
+``functions.refcols`` or an inline Column expression, with a DuckDB
 dual. Covered here: T1 extractTitle, B1 extractYearFromDate, B3
 generateBibTeXKey, V2 extractDescriptionFromTags, E4 extractImageContext,
-O3 calculateImageMetrics, S7 download naming, O4 formatFileSize — the
-rows of the operator inventory that are SQL-expressible but not already
-exercised by the pipeline-level queries.
+O3 calculateImageMetrics, S7 download naming, O4 formatFileSize, T4
+countWords, B2 sanitizeBibTeXText, B5/B6 title similarity, P2 URL
+algebra and A1 ordered reassembly — the rows of the operator inventory
+that are SQL-expressible but not already exercised by the
+pipeline-level queries.
 
-Scale note: all of these are per-row projections (no shuffle, whole plan
-map-side); at 10^12 docs the cost is a single scan + codegen'd
-expressions, so the only engineering is keeping them off the Python
-interpreter — which they are, being pure Column expressions.
+Scale note: all of these but B6 (a join on doc_id + 1) and A1 (one
+groupBy) are per-row projections (no shuffle, whole plan map-side); at
+10^12 docs the cost is a single scan + codegen'd expressions, so the
+only engineering is keeping them off the Python interpreter — which
+they are, being pure Column expressions.
 """
 
 from __future__ import annotations
@@ -418,6 +422,196 @@ FROM t
 """
 
 
+# ---------------------------------------------------------------------------
+# T4 countWords, B2 sanitizeBibTeXText, B5/B6 title similarity, P2 URL algebra
+# ---------------------------------------------------------------------------
+
+def word_count_t4(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """T4 countWords (markdown-splitter.ts:326-332): split on whitespace,
+    drop empties, count."""
+    return _docs(spark, sf_dir).select(
+        "doc_id",
+        F.size(
+            F.filter(F.split(F.col("text"), r"\s+"), lambda w: F.length(w) > 0)
+        ).cast("bigint").alias("n_words"),
+    )
+
+
+WORD_COUNT_SQL = """
+SELECT doc_id,
+       len(list_filter(string_split_regex(text, '\\s+'), w -> length(w) > 0)) AS n_words
+FROM documents
+"""
+
+
+def sanitize_bibtex_b2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """B2 sanitizeBibTeXText (bibtex-generator.ts:127-143) as a
+    regexp_replace chain (SURVEY.md §2.7: chain preferred, SQL-only).
+    Applied to the first 80 chars of each document."""
+    s = F.substring("text", 1, 80)
+    # escape & % $ # _ { } ~ ^ \ with a backslash ($ via \$ group ref-safe)
+    out = F.regexp_replace(s, r"([&%$#_{}~^\\])", r"\\$1")
+    # whitespace class members except plain space get escaped too (:133-136)
+    out = F.regexp_replace(out, "\t", "\\\\\t")
+    out = F.regexp_replace(out, "\n", "\\\\\n")
+    return _docs(spark, sf_dir).select("doc_id", out.alias("sanitized"))
+
+
+SANITIZE_SQL = r"""
+SELECT doc_id,
+       regexp_replace(
+         regexp_replace(
+           regexp_replace(substr(text, 1, 80), '([&%$#_{}~^\\])', '\\\1', 'g'),
+           '\t', '\\' || chr(9), 'g'),
+         '\n', '\\' || chr(10), 'g') AS sanitized
+FROM documents
+"""
+
+
+def title_similarity_b6(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """B5/B6 normalize + compare (bibtex-generator.ts:269-325) over
+    consecutive doc pairs: dup-counting original side, set on the other,
+    similarity = common / max(len(orig), |set|), match when > 0.75."""
+    docs = _docs(spark, sf_dir)
+    norm = F.trim(
+        F.regexp_replace(F.regexp_replace(F.lower(F.substring("text", 1, 60)), "[^a-z\\s]", ""), r"\s+", " ")
+    )
+    n = docs.select("doc_id", norm.alias("norm"))
+    a = n.alias("a")
+    b = n.select((F.col("doc_id") - 1).alias("doc_id"), F.col("norm").alias("norm_b")).alias("b")
+    pairs = a.join(b, "doc_id")
+    orig_words = F.split(F.col("norm"), " ")
+    bib_set = F.array_distinct(F.split(F.col("norm_b"), " "))
+    common = F.size(F.filter(orig_words, lambda w: F.array_contains(bib_set, w)))
+    similarity = common / F.greatest(F.size(orig_words), F.size(bib_set))
+    matches = F.when(
+        (F.length("norm") < 10) | (F.length("norm_b") < 10),
+        F.col("norm") == F.col("norm_b"),
+    ).otherwise(similarity > 0.75)
+    return pairs.select(
+        "doc_id",
+        F.round(similarity, 4).alias("similarity"),
+        matches.alias("matches"),
+    )
+
+
+TITLE_SIM_SQL = """
+WITH n AS (
+  SELECT doc_id,
+         trim(regexp_replace(regexp_replace(lower(substr(text, 1, 60)), '[^a-z\\s]', '', 'g'),
+              '\\s+', ' ', 'g')) AS norm
+  FROM documents
+),
+pairs AS (
+  SELECT a.doc_id, a.norm, b.norm AS norm_b
+  FROM n a JOIN n b ON b.doc_id = a.doc_id + 1
+),
+calc AS (
+  SELECT doc_id, norm, norm_b,
+         string_split(norm, ' ') AS ow,
+         list_distinct(string_split(norm_b, ' ')) AS bs
+  FROM pairs
+),
+sim AS (
+  SELECT doc_id, norm, norm_b,
+         len(list_filter(ow, w -> list_contains(bs, w))) /
+         greatest(len(ow), len(bs)) AS similarity
+  FROM calc
+)
+SELECT doc_id, round(similarity, 4) AS similarity,
+       CASE WHEN length(norm) < 10 OR length(norm_b) < 10 THEN norm = norm_b
+            ELSE similarity > 0.75 END AS matches
+FROM sim
+"""
+
+
+def url_normalize_p2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """P2 arXiv-style /abs|html/ -> /pdf/ + ensure .pdf
+    (generic-handler.ts:186-191, base-handler.ts:47-52) over synthesized
+    urls keyed by doc_id."""
+    docs = _docs(spark, sf_dir)
+    url = F.concat(
+        F.lit("https://arxiv.org/"),
+        F.when(F.col("doc_id") % 3 == 0, F.lit("abs"))
+        .when(F.col("doc_id") % 3 == 1, F.lit("html"))
+        .otherwise(F.lit("pdf")),
+        F.lit("/2401."),
+        F.lpad(F.col("doc_id").cast("string"), 5, "0"),
+    )
+    rewritten = F.regexp_replace(url, "/(abs|html)/", "/pdf/")
+    ensured = F.when(
+        ~F.lower(rewritten).endswith(".pdf"), F.concat(rewritten, F.lit(".pdf"))
+    ).otherwise(rewritten)
+    return docs.select("doc_id", url.alias("url"), ensured.alias("pdf_url"))
+
+
+URL_NORMALIZE_SQL = """
+WITH u AS (
+  SELECT doc_id,
+         'https://arxiv.org/' ||
+         CASE WHEN doc_id % 3 = 0 THEN 'abs' WHEN doc_id % 3 = 1 THEN 'html' ELSE 'pdf' END ||
+         '/2401.' || lpad(doc_id::VARCHAR, 5, '0') AS url
+  FROM documents
+),
+r AS (SELECT doc_id, url, regexp_replace(url, '/(abs|html)/', '/pdf/') AS rewritten FROM u)
+SELECT doc_id, url,
+       CASE WHEN NOT ends_with(lower(rewritten), '.pdf') THEN rewritten || '.pdf'
+            ELSE rewritten END AS pdf_url
+FROM r
+"""
+
+
+# ---------------------------------------------------------------------------
+# A1 ordered reassembly (markdown-processor.ts:17-77) over events
+# ---------------------------------------------------------------------------
+
+def assemble_pages_a1(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The A1 groupBy-sort reassembly (markdown-processor.ts:17-77) applied
+    to the events stream: each user's events are its 'pages' in (ts,
+    event_id) order; separator before every element after the first,
+    ``#### Page {i+1}`` headings from position. Same collect_list +
+    array_sort + transform/concat_ws plan as the production pipeline."""
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet").filter(
+        F.col("user_id") < 50
+    )
+    grouped = ev.groupBy("user_id").agg(
+        F.array_sort(
+            F.collect_list(F.struct("ts", "event_id", "event_type"))
+        ).alias("pages")
+    )
+    md = F.concat_ws(
+        "",
+        F.transform(
+            F.col("pages"),
+            lambda p, i: F.concat(
+                F.when(i > 0, F.lit("\n\n---\n\n")).otherwise(F.lit("")),
+                F.lit("#### Page "),
+                (i + 1).cast("string"),
+                F.lit("\n\n"),
+                p["event_type"],
+            ),
+        ),
+    )
+    return grouped.select(
+        "user_id", md.alias("doc"), F.size("pages").cast("bigint").alias("page_count")
+    )
+
+
+ASSEMBLE_SQL = """
+WITH ordered AS (
+  SELECT user_id, event_type,
+         row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
+  FROM events WHERE user_id < 50
+)
+SELECT user_id,
+       string_agg('#### Page ' || rn::VARCHAR || chr(10) || chr(10) || event_type,
+                  chr(10) || chr(10) || '---' || chr(10) || chr(10) ORDER BY rn) AS doc,
+       count(*) AS page_count
+FROM ordered
+GROUP BY user_id
+"""
+
+
 QUERIES: dict[str, tuple] = {
     "ref_title_extract": (title_extract, TITLE_EXTRACT_SQL),
     "ref_year_extract": (year_extract, YEAR_EXTRACT_SQL),
@@ -428,4 +622,9 @@ QUERIES: dict[str, tuple] = {
     "ref_export_name": (export_name, EXPORT_NAME_SQL),
     "ref_format_size": (format_size, FORMAT_SIZE_SQL),
     "ref_format_timestamp": (format_timestamp_q, FORMAT_TIMESTAMP_SQL),
+    "ref_word_count": (word_count_t4, WORD_COUNT_SQL),
+    "ref_sanitize_bibtex": (sanitize_bibtex_b2, SANITIZE_SQL),
+    "ref_title_similarity": (title_similarity_b6, TITLE_SIM_SQL),
+    "ref_url_normalize": (url_normalize_p2, URL_NORMALIZE_SQL),
+    "ref_assemble_pages": (assemble_pages_a1, ASSEMBLE_SQL),
 }

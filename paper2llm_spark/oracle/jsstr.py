@@ -82,7 +82,7 @@ def js_replace_first(haystack: str, search: str, replacement: str) -> str:
 
 def utf16_len(s: str) -> int:
     """``String.prototype.length`` — UTF-16 code units."""
-    return sum(2 if ord(c) > 0xFFFF else 1 for c in s)
+    return len(s.encode("utf-16-le", "surrogatepass")) // 2
 
 
 def utf16_substring(s: str, start: int, end: int | None = None) -> str:

@@ -58,6 +58,8 @@ _TEXT_OP_RE = re.compile(
 _IMAGE_OP_RE = re.compile(
     rb"q (-?\d+) 0 0 (-?\d+) (-?\d+) (-?\d+) cm /(\w+) Do Q"
 )
+_ESCAPE_RE = re.compile(rb"\\(.)", re.S)
+_ESCAPES = {b"n": b"\n", b"r": b"\r"}
 
 
 class PdfParseError(ValueError):
@@ -65,23 +67,11 @@ class PdfParseError(ValueError):
 
 
 def _unescape_pdf_string(raw: bytes) -> str:
-    out = bytearray()
-    i = 0
-    while i < len(raw):
-        b = raw[i]
-        if b == 0x5C and i + 1 < len(raw):
-            nxt = raw[i + 1]
-            if nxt == 0x6E:  # n
-                out.append(0x0A)
-            elif nxt == 0x72:  # r
-                out.append(0x0D)
-            else:
-                out.append(nxt)
-            i += 2
-        else:
-            out.append(b)
-            i += 1
-    return out.decode("utf-8", errors="surrogatepass")
+    """``\\n`` -> LF, ``\\r`` -> CR, ``\\`` + any other byte -> that byte;
+    a lone trailing backslash is kept."""
+    if b"\\" in raw:
+        raw = _ESCAPE_RE.sub(lambda m: _ESCAPES.get(m.group(1), m.group(1)), raw)
+    return raw.decode("utf-8", errors="surrogatepass")
 
 
 def count_pages(data: bytes) -> int:

@@ -7,9 +7,10 @@ same canonicalization + dtype-kind rules as tests/test_driver_contract.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 

@@ -9,7 +9,11 @@ import pytest
 def spark():
     from paper2llm_spark.session import get_spark
 
-    s = get_spark(app_name="paper2llm_spark_tests", cpus=8, shuffle_partitions=8)
+    # a heap sized to a 16 GB test machine (get_spark defaults to 48g)
+    s = get_spark(
+        app_name="paper2llm_spark_tests", cpus=8, shuffle_partitions=8,
+        extra_conf={"spark.driver.memory": "6g"},
+    )
     yield s
 
 

@@ -14,10 +14,19 @@ import pytest
 import __spark_entry__ as entry_mod
 
 SF_DIR = "/root/testdata/sf0.01"
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
+TABLES = ["events", "documents"]
+
+# the paper surface: reference operators, WARC/WET/WAT, the pipeline
+PAPER_QUERIES = {
+    "ref_title_extract", "ref_year_extract", "ref_bibtex_key",
+    "ref_tag_extract", "ref_image_context", "ref_image_metrics",
+    "ref_export_name", "ref_format_size", "ref_format_timestamp",
+    "ref_word_count", "ref_sanitize_bibtex", "ref_title_similarity",
+    "ref_url_normalize", "ref_assemble_pages",
+    "source_warc_scan", "sink_wet_roundtrip", "sink_wat_roundtrip",
+    "extract_html_pipeline", "extract_html_pipeline_desc",
+    "stream_extract_incremental",
+}
 
 
 def _canon(v) -> str:
@@ -112,6 +121,17 @@ def registry():
 
 def test_every_query_has_unique_name(registry):
     assert len(registry) >= 20, f"only {len(registry)} queries registered"
+    assert set(registry) == PAPER_QUERIES
+    assert set(entry_mod.oracle_sql()) == PAPER_QUERIES
+
+
+def test_duplicate_query_name_is_rejected(monkeypatch):
+    from paper2llm_spark.sources import warc
+
+    clash = dict(warc.QUERIES, ref_word_count=warc.QUERIES["source_warc_scan"])
+    monkeypatch.setattr(warc, "QUERIES", clash)
+    with pytest.raises(ValueError, match="ref_word_count"):
+        entry_mod._registry()
 
 
 @pytest.mark.parametrize(
@@ -153,16 +173,6 @@ def test_query_matches_duckdb_oracle(name, spark, duck, registry):
             (a, b) for a, b in zip(s_sorted, d_sorted) if a != b
         ][:5]
         pytest.fail(f"{name}: value hash mismatch; first diffs: {diffs}")
-
-
-def test_embedding_neardup_not_vacuous(duck):
-    """The near-dup gate must verify actual pairs: the planted-duplicate
-    corpus (operators/similarity.py) guarantees a non-empty result — a
-    0-vs-0 'pass' would verify nothing."""
-    from paper2llm_spark.operators.similarity import EMBEDDING_NEARDUP_SQL
-
-    n = len(duck.sql(EMBEDDING_NEARDUP_SQL).fetchdf())
-    assert n > 0
 
 
 def test_entry_smoke(spark):

@@ -1,10 +1,17 @@
 """Writer<->parser round-trip and fixture-corpus sanity (F-REFLOW R1-R3, A6)."""
 
 import pytest
+from hypothesis import given
+from hypothesis import strategies as st
 
 from paper2llm_spark.html_extract import extract_html_markdown
 from paper2llm_spark.pdf.fixtures import fixture_docs, golden_outputs, pages_rows
-from paper2llm_spark.pdf.parser import PdfParseError, count_pages, parse_pdf
+from paper2llm_spark.pdf.parser import (
+    PdfParseError,
+    _unescape_pdf_string,
+    count_pages,
+    parse_pdf,
+)
 from paper2llm_spark.pdf.writer import layout_markdown_page, two_column_page, write_pdf
 
 
@@ -162,3 +169,72 @@ def test_html_extract_ordered_vs_unordered_lists():
         b"<ul><li>bullet a</li><li>bullet b</li></ul></body></html>"
     )
     assert md == "1. first\n\n2. second\n\n- bullet a\n\n- bullet b"
+
+
+def _unescape_by_byte(raw: bytes) -> str:
+    """The byte loop ``_unescape_pdf_string`` replaced, kept as its
+    definition."""
+    out = bytearray()
+    i = 0
+    while i < len(raw):
+        b = raw[i]
+        if b == 0x5C and i + 1 < len(raw):
+            nxt = raw[i + 1]
+            if nxt == 0x6E:  # n
+                out.append(0x0A)
+            elif nxt == 0x72:  # r
+                out.append(0x0D)
+            else:
+                out.append(nxt)
+            i += 2
+        else:
+            out.append(b)
+            i += 1
+    return out.decode("utf-8", errors="surrogatepass")
+
+
+def _outcome(f, raw):
+    try:
+        return f(raw)
+    except UnicodeDecodeError as e:
+        return ("UnicodeDecodeError", e.start, e.end)
+
+
+_PDF_STRING_PIECES = st.one_of(
+    st.sampled_from(
+        [b"\\", b"\\n", b"\\r", b"\\\\", b"\\(", b"\\)", b"\\\n", b"\\\r",
+         b"\xc3\xa9", b"\xed\xa0\x80"]
+    ),
+    st.binary(min_size=1, max_size=1).map(lambda b: b"\\" + b),  # any escape
+    st.binary(max_size=3),
+)
+
+
+@given(st.lists(_PDF_STRING_PIECES, max_size=12).map(b"".join))
+def test_unescape_pdf_string_matches_byte_loop(raw):
+    assert _outcome(_unescape_pdf_string, raw) == _outcome(_unescape_by_byte, raw)
+
+
+@pytest.mark.parametrize(
+    "raw, text",
+    [
+        (b"plain", "plain"),
+        (b"end\\", "end\\"),  # lone trailing backslash kept
+        (b"a\\nb", "a\nb"),
+        (b"a\\rb", "a\rb"),
+        (b"a\\\\b", "a\\b"),
+        (b"\\(x\\)", "(x)"),
+        (b"a\\\nb", "a\nb"),  # backslash + newline byte -> the newline
+        (b"\\\\\\", "\\\\"),  # escaped backslash, then a lone one
+        (b"caf\xc3\xa9 \\t", "caf\u00e9 t"),
+        (b"\xed\xa0\x80", "\ud800"),  # surrogatepass decode
+    ],
+    ids=[
+        "plain", "trailing_backslash", "escaped_n", "escaped_r",
+        "escaped_backslash", "escaped_parens", "backslash_newline",
+        "escaped_then_lone_backslash", "utf8", "lone_surrogate",
+    ],
+)
+def test_unescape_pdf_string_edge_cases(raw, text):
+    assert _unescape_pdf_string(raw) == text
+    assert _unescape_by_byte(raw) == text
