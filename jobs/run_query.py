@@ -1,8 +1,7 @@
 #!/usr/bin/env python
-"""spark-submit entry for ANY registered driver query.
+"""spark-submit entry for ANY registered analytics query.
 
-The reference operators, the WARC source, the WET/WAT sinks and the
-extraction pipeline are exposed in the driver registry
+Every operator in the engine is exposed in the driver registry
 (`__spark_entry__.queries()`); this job runs one by name over a
 testdata-shaped directory of parquet tables and writes (or shows) the
 result — so a user can run every query the engine supports without
@@ -11,12 +10,12 @@ writing code.
 Cluster:
 
     spark-submit --py-files paper2llm_spark.zip,__spark_entry__.py \
-        jobs/run_query.py --query ref_bibtex_key \
+        jobs/run_query.py --query dedup_lsh_clusters \
         --sf-dir <tables dir> --output <parquet dir>
 
 Local smoke:
 
-    python jobs/run_query.py --query ref_word_count \
+    python jobs/run_query.py --query text_quality_score \
         --sf-dir /root/testdata/sf0.01 --cpus 8
 
     python jobs/run_query.py --list

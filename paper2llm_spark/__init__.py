@@ -11,12 +11,10 @@ Layout:
   deterministic transforms (golden generator AND pandas-UDF bodies).
 * ``pdf/``       — deterministic PDF writer (fixtures) + layout-aware
   parser (the OCR-stage replacement).
-* ``operators/`` — Spark implementations of the pipeline stages
-  (SQL-expression operators and Arrow pandas-UDF operators) and the
-  reference operators as driver queries (``refscalars``).
-* ``functions/`` — Spark Column twins of the reference scalars.
-* ``sources/``   — input-table scan helpers, payload detection, WARC
-  input and WET/WAT output.
+* ``operators/`` — Spark implementations: SQL-expression operators and
+  Arrow pandas-UDF operators, plus web-scale ops (dedup, similarity,
+  text stats, multimodal plumbing).
+* ``sources/``   — input-table scan helpers, payload detection.
 * ``plans/``     — end-to-end extract pipeline, checkpoint/resume,
   lineage metrics, skew handling.
 * ``streaming/`` — incremental (foreachBatch) wrapper over the pipeline.

@@ -3,8 +3,8 @@
 Exercises the classical operator checklist (SURVEY.md §2.10) on real
 multi-table data: aggregation with map-side combine (Q1 shape), the
 3-table join + top-k (Q3 shape), window ranking, rollup grouping sets,
-time-windowed event aggregation (the batch twin of the streaming path),
-and the A1 ordered-reassembly semantics applied to the events stream.
+and time-windowed event aggregation (the batch twin of the streaming
+path).
 """
 
 from __future__ import annotations
@@ -152,58 +152,10 @@ GROUP BY 1, 2
 """
 
 
-# --- A1 ordered reassembly semantics over events -------------------------------
-
-def assemble_pages_a1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The A1 groupBy-sort reassembly (markdown-processor.ts:17-77) applied
-    to the events stream: each user's events are its 'pages' in (ts,
-    event_id) order; separator before every element after the first,
-    ``#### Page {i+1}`` headings from position. Same collect_list +
-    array_sort + transform/concat_ws plan as the production pipeline."""
-    ev = _t(spark, sf_dir, "events").filter(F.col("user_id") < 50)
-    grouped = ev.groupBy("user_id").agg(
-        F.array_sort(
-            F.collect_list(F.struct("ts", "event_id", "event_type"))
-        ).alias("pages")
-    )
-    md = F.concat_ws(
-        "",
-        F.transform(
-            F.col("pages"),
-            lambda p, i: F.concat(
-                F.when(i > 0, F.lit("\n\n---\n\n")).otherwise(F.lit("")),
-                F.lit("#### Page "),
-                (i + 1).cast("string"),
-                F.lit("\n\n"),
-                p["event_type"],
-            ),
-        ),
-    )
-    return grouped.select(
-        "user_id", md.alias("doc"), F.size("pages").cast("bigint").alias("page_count")
-    )
-
-
-ASSEMBLE_SQL = """
-WITH ordered AS (
-  SELECT user_id, event_type,
-         row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-  FROM events WHERE user_id < 50
-)
-SELECT user_id,
-       string_agg('#### Page ' || rn::VARCHAR || chr(10) || chr(10) || event_type,
-                  chr(10) || chr(10) || '---' || chr(10) || chr(10) ORDER BY rn) AS doc,
-       count(*) AS page_count
-FROM ordered
-GROUP BY user_id
-"""
-
-
 QUERIES: dict[str, tuple] = {
     "rel_q1_pricing_summary": (q1_pricing_summary, Q1_SQL),
     "rel_q3_top_orders": (q3_top_orders, Q3_SQL),
     "rel_customer_spend_rank": (customer_spend_rank, SPEND_RANK_SQL),
     "rel_orders_rollup": (orders_rollup, ROLLUP_SQL),
     "rel_events_hourly": (events_hourly, EVENTS_HOURLY_SQL),
-    "ref_assemble_pages": (assemble_pages_a1, ASSEMBLE_SQL),
 }

@@ -1,7 +1,5 @@
 """Text analysis operators over ``documents`` — lang-ID, quality scoring,
-token counting, fingerprinting — plus the reference-derived scalar ops
-(word count T4, BibTeX sanitize B2, title similarity B5/B6, URL algebra
-P2) expressed as portable SQL.
+token counting, fingerprinting, PII scrubbing and TF-IDF keywords.
 
 Everything here is whole-stage-codegen expressions (no UDF, no shuffle
 except the final exchange the sink needs), so the per-row cost at 10^12
@@ -207,145 +205,6 @@ FROM documents
 
 
 # ---------------------------------------------------------------------------
-# reference-derived scalar ops as portable SQL
-# ---------------------------------------------------------------------------
-
-def word_count_t4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T4 countWords (markdown-splitter.ts:326-332): split on whitespace,
-    drop empties, count."""
-    return _docs(spark, sf_dir).select(
-        "doc_id",
-        F.size(
-            F.filter(F.split(F.col("text"), r"\s+"), lambda w: F.length(w) > 0)
-        ).cast("bigint").alias("n_words"),
-    )
-
-
-WORD_COUNT_SQL = """
-SELECT doc_id,
-       len(list_filter(string_split_regex(text, '\\s+'), w -> length(w) > 0)) AS n_words
-FROM documents
-"""
-
-
-def sanitize_bibtex_b2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B2 sanitizeBibTeXText (bibtex-generator.ts:127-143) as a
-    regexp_replace chain (SURVEY.md §2.7: chain preferred, SQL-only).
-    Applied to the first 80 chars of each document."""
-    s = F.substring("text", 1, 80)
-    # escape & % $ # _ { } ~ ^ \ with a backslash ($ via \$ group ref-safe)
-    out = F.regexp_replace(s, r"([&%$#_{}~^\\])", r"\\$1")
-    # whitespace class members except plain space get escaped too (:133-136)
-    out = F.regexp_replace(out, "\t", "\\\\\t")
-    out = F.regexp_replace(out, "\n", "\\\\\n")
-    return _docs(spark, sf_dir).select("doc_id", out.alias("sanitized"))
-
-
-SANITIZE_SQL = r"""
-SELECT doc_id,
-       regexp_replace(
-         regexp_replace(
-           regexp_replace(substr(text, 1, 80), '([&%$#_{}~^\\])', '\\\1', 'g'),
-           '\t', '\\' || chr(9), 'g'),
-         '\n', '\\' || chr(10), 'g') AS sanitized
-FROM documents
-"""
-
-
-def title_similarity_b6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B5/B6 normalize + compare (bibtex-generator.ts:269-325) over
-    consecutive doc pairs: dup-counting original side, set on the other,
-    similarity = common / max(len(orig), |set|), match when > 0.75."""
-    docs = _docs(spark, sf_dir)
-    norm = F.trim(
-        F.regexp_replace(F.regexp_replace(F.lower(F.substring("text", 1, 60)), "[^a-z\\s]", ""), r"\s+", " ")
-    )
-    n = docs.select("doc_id", norm.alias("norm"))
-    a = n.alias("a")
-    b = n.select((F.col("doc_id") - 1).alias("doc_id"), F.col("norm").alias("norm_b")).alias("b")
-    pairs = a.join(b, "doc_id")
-    orig_words = F.split(F.col("norm"), " ")
-    bib_set = F.array_distinct(F.split(F.col("norm_b"), " "))
-    common = F.size(F.filter(orig_words, lambda w: F.array_contains(bib_set, w)))
-    similarity = common / F.greatest(F.size(orig_words), F.size(bib_set))
-    matches = F.when(
-        (F.length("norm") < 10) | (F.length("norm_b") < 10),
-        F.col("norm") == F.col("norm_b"),
-    ).otherwise(similarity > 0.75)
-    return pairs.select(
-        "doc_id",
-        F.round(similarity, 4).alias("similarity"),
-        matches.alias("matches"),
-    )
-
-
-TITLE_SIM_SQL = """
-WITH n AS (
-  SELECT doc_id,
-         trim(regexp_replace(regexp_replace(lower(substr(text, 1, 60)), '[^a-z\\s]', '', 'g'),
-              '\\s+', ' ', 'g')) AS norm
-  FROM documents
-),
-pairs AS (
-  SELECT a.doc_id, a.norm, b.norm AS norm_b
-  FROM n a JOIN n b ON b.doc_id = a.doc_id + 1
-),
-calc AS (
-  SELECT doc_id, norm, norm_b,
-         string_split(norm, ' ') AS ow,
-         list_distinct(string_split(norm_b, ' ')) AS bs
-  FROM pairs
-),
-sim AS (
-  SELECT doc_id, norm, norm_b,
-         len(list_filter(ow, w -> list_contains(bs, w))) /
-         greatest(len(ow), len(bs)) AS similarity
-  FROM calc
-)
-SELECT doc_id, round(similarity, 4) AS similarity,
-       CASE WHEN length(norm) < 10 OR length(norm_b) < 10 THEN norm = norm_b
-            ELSE similarity > 0.75 END AS matches
-FROM sim
-"""
-
-
-def url_normalize_p2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P2 arXiv-style /abs|html/ -> /pdf/ + ensure .pdf
-    (generic-handler.ts:186-191, base-handler.ts:47-52) over synthesized
-    urls keyed by doc_id."""
-    docs = _docs(spark, sf_dir)
-    url = F.concat(
-        F.lit("https://arxiv.org/"),
-        F.when(F.col("doc_id") % 3 == 0, F.lit("abs"))
-        .when(F.col("doc_id") % 3 == 1, F.lit("html"))
-        .otherwise(F.lit("pdf")),
-        F.lit("/2401."),
-        F.lpad(F.col("doc_id").cast("string"), 5, "0"),
-    )
-    rewritten = F.regexp_replace(url, "/(abs|html)/", "/pdf/")
-    ensured = F.when(
-        ~F.lower(rewritten).endswith(".pdf"), F.concat(rewritten, F.lit(".pdf"))
-    ).otherwise(rewritten)
-    return docs.select("doc_id", url.alias("url"), ensured.alias("pdf_url"))
-
-
-URL_NORMALIZE_SQL = """
-WITH u AS (
-  SELECT doc_id,
-         'https://arxiv.org/' ||
-         CASE WHEN doc_id % 3 = 0 THEN 'abs' WHEN doc_id % 3 = 1 THEN 'html' ELSE 'pdf' END ||
-         '/2401.' || lpad(doc_id::VARCHAR, 5, '0') AS url
-  FROM documents
-),
-r AS (SELECT doc_id, url, regexp_replace(url, '/(abs|html)/', '/pdf/') AS rewritten FROM u)
-SELECT doc_id, url,
-       CASE WHEN NOT ends_with(lower(rewritten), '.pdf') THEN rewritten || '.pdf'
-            ELSE rewritten END AS pdf_url
-FROM r
-"""
-
-
-# ---------------------------------------------------------------------------
 # PII scrubbing (email / phone / IP redaction)
 # ---------------------------------------------------------------------------
 
@@ -534,8 +393,4 @@ QUERIES: dict[str, tuple] = {
     "text_quality_score": (quality_score, QUALITY_SQL),
     "text_token_count": (token_count, TOKEN_COUNT_SQL),
     "text_fingerprint": (doc_fingerprint, FINGERPRINT_SQL),
-    "ref_word_count": (word_count_t4, WORD_COUNT_SQL),
-    "ref_sanitize_bibtex": (sanitize_bibtex_b2, SANITIZE_SQL),
-    "ref_title_similarity": (title_similarity_b6, TITLE_SIM_SQL),
-    "ref_url_normalize": (url_normalize_p2, URL_NORMALIZE_SQL),
 }

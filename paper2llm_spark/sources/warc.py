@@ -210,7 +210,7 @@ _HTML_TEMPLATE = (
 
 
 def _stage_warc(sf_dir: str) -> str:
-    """Fixture staging (driver-side): the
+    """Fixture staging (driver-side, like ``_stage_events``): the
     sf-dir documents rendered through the flagship HTML template into
     4 archives — two plain, two gzipped — so the graded read path
     covers both encodings and the warcinfo-skip."""
@@ -420,8 +420,8 @@ WAT_HOSTS = 16   # synthetic target-host universe
 
 
 def _wat_hash60(doc_id_col, k_col):
-    """Portable 60-bit md5 hash of 'doc_id@k': the first 15 hex digits
-    of the md5, identical in Spark and DuckDB (``_WAT_LINK_HASH``)."""
+    """Portable 60-bit md5 hash of 'doc_id@k' (functions.text contract,
+    inlined to keep sources/ free of an operators/ import)."""
     return F.conv(
         F.substring(
             F.md5(F.concat(doc_id_col.cast("string"), F.lit("@"),
