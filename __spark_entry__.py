@@ -141,7 +141,7 @@ def _extract_pipeline_desc_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   "# Document {id}\n\n{text'}\n\n## References\n\n[1] synthetic."
 #   with text' = newline->space + ws-run collapse + trim of text;
 # * assembly prepends "#### Page 1\n\n" (single page;
-#   operators/assemble.py:84, markdown-processor.ts:45);
+#   oracle/assemble.py process_markdown, markdown-processor.ts:45);
 # * no image refs -> enhancement is the identity on both branches, so one
 #   dual serves placeholder AND descriptions mode;
 # * the splitter puts the boundary at "## References" (ACK pattern

@@ -8,7 +8,7 @@ byte-identical to the reference's deterministic semantics.
 Layout:
 
 * ``oracle/``    — pure-Python transliteration of the reference's
-  deterministic transforms (golden generator AND pandas-UDF bodies).
+  deterministic transforms (golden generator AND the Python UDF bodies).
 * ``pdf/``       — deterministic PDF writer (fixtures) + layout-aware
   parser (the OCR-stage replacement).
 * ``operators/`` — Spark implementations: SQL-expression operators and

@@ -1,7 +1,7 @@
 """Parse stage — S4 replacement: binary payload -> page rows.
 
-The per-page route of the giant-document (skew) path, SURVEY.md §3.4 /
-§4 "Skew: giant PDFs": two ``mapInPandas`` stages with an explicit
+The per-page route of the giant/re-crawl tail, SURVEY.md §3.4 / §4
+"Skew: giant PDFs": two ``mapInPandas`` stages with an explicit
 by-number repartition between them:
 
 1. :func:`plan_chunks` — cheap page-count scan; documents above
@@ -9,13 +9,16 @@ by-number repartition between them:
    inside a UDF, so the split is explicit; payload bytes are duplicated
    only for the (rare) giant documents that need spreading.
 2. :func:`parse_chunks` — the real parse (PDF layout parse or HTML
-   boilerplate strip) producing one row per page, carrying per-partition
+   boilerplate strip) producing one row per page with only what
+   conversion reads (index, markdown, image ids), carrying per-partition
    lineage measurements (partition id, wall ms, bytes in).
 
-The pipeline (plans/extract.py) sends every other document through the
-fused document stage (operators/document.py) instead, which parses and
-converts in one Python pass; :func:`parse_pages` keeps both routes at
-page granularity for per-layer measurement.
+``operators.assemble.assemble_documents`` then groups the pages by url
+and converts each document. The pipeline (plans/extract.py) sends every
+other document through the fused document stage (operators/document.py)
+instead, which parses and converts in one Python pass;
+:func:`parse_pages` keeps both routes at page granularity for per-layer
+measurement.
 
 Parse failures become ``err`` rows (quarantine, S6 semantics:
 ocr-service.ts:468-532 maps errors to values instead of crashing the
@@ -126,7 +129,7 @@ def parse_chunks(df: DataFrame) -> DataFrame:
             def no_page(url, nbytes, model, err):
                 rows.append({
                     "url": url, "page_index": -1, "page_markdown": None,
-                    "images": None, "dimensions": None, "model": model,
+                    "image_ids": None, "model": model,
                     "err": err, "bytes_in": nbytes,
                     "parse_partition": partition_id, "parse_wall_ms": 0,
                 })
@@ -158,8 +161,7 @@ def parse_chunks(df: DataFrame) -> DataFrame:
                         "url": url,
                         "page_index": page["index"],
                         "page_markdown": page["markdown"],
-                        "images": page["images"],
-                        "dimensions": page["dimensions"],
+                        "image_ids": [im["id"] for im in page["images"]],
                         "model": ocr["model"],
                         "err": None,
                         "bytes_in": nbytes,
@@ -169,7 +171,7 @@ def parse_chunks(df: DataFrame) -> DataFrame:
             wall_ms = int((time.monotonic() - t0) * 1000)
             for r in rows:
                 r["parse_wall_ms"] = wall_ms
-            yield pd.DataFrame(rows, columns=[f.name for f in PAGE_ROW.fields])
+            yield pd.DataFrame(rows, columns=PAGE_ROW.fieldNames())
 
     return df.mapInPandas(gen, schema=PAGE_ROW)
 
@@ -183,10 +185,18 @@ def chunked_pages(
     spread_partitions: int | None = None,
 ) -> DataFrame:
     """Page rows of the per-page route, for the documents routed to it
-    (giant payloads): the page-range planner, then an explicit spread
-    repartition on (url, page_lo) so one 2000-page PDF doesn't pin a
-    single task — AQE can't see skew inside a UDF, so this split is
-    explicit (SURVEY.md §4).
+    (giant payloads and re-crawled urls): the page-range planner, then an
+    explicit spread repartition on (url, page_lo) so one 2000-page PDF
+    doesn't pin a single task — AQE can't see skew inside a UDF, so this
+    split is explicit (SURVEY.md §4).
+
+    A url on more than one input row is one document: its latest crawl
+    (the greatest ``warc_ts``, nulls oldest; ties broken by the payload's
+    ``xxhash64``), as when each crawl overwrites the last. The ``max_by``
+    aggregate that keeps it runs on the ``repartition("url")`` below,
+    adding no exchange. (A ``row_number`` window there keeps the same
+    row, but with no document routed here it costs one more job and
+    task per operation.)
 
     The SQL-only ``repartition("url")`` on the input ends the scan stage
     before any Python node, so scan tasks start no Python worker; with
@@ -198,7 +208,11 @@ def chunked_pages(
     here the spread's ``spread_partitions`` empty tasks still start
     Python workers.
     """
-    chunks = plan_chunks(df.repartition("url"), chunk_pages)
+    latest = F.max_by(F.struct("kind", "html"), F.struct("warc_ts", F.xxhash64("html")))
+    docs = df.repartition("url").groupBy("url").agg(latest.alias("doc")).select(
+        "url", "doc.kind", "doc.html"
+    )
+    chunks = plan_chunks(docs, chunk_pages)
     if spread_partitions is None:
         spread_partitions = df.sparkSession.sparkContext.defaultParallelism
     return parse_chunks(chunks.repartition(spread_partitions, "url", "page_lo"))

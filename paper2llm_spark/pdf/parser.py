@@ -40,9 +40,14 @@ GAP_THRESHOLD = 20  # anchor step: 14 within paragraph, 28 across blocks
 
 _SIZE_TO_LEVEL = {size: level for level, size in HEADING_SIZES.items()}
 
-_OBJ_RE = re.compile(rb"(\d+) 0 obj\s*(.*?)\s*endobj", re.S)
+# (?<!\d): a match never starts inside a digit run (one that would has
+# already failed from the run's first digit), so a long digit run is
+# scanned once, not once per digit. The body's trailing whitespace is
+# stripped after the match (see _objects), not by a \s* before the
+# closer, which rescans a whitespace run from each of its positions.
+_OBJ_RE = re.compile(rb"(?<!\d)(\d+) 0 obj\s*(.*?)endobj", re.S)
 _KIDS_RE = re.compile(rb"/Kids\s*\[(.*?)\]", re.S)
-_REF_RE = re.compile(rb"(\d+) 0 R")
+_REF_RE = re.compile(rb"(?<!\d)(\d+) 0 R")
 _CONTENTS_RE = re.compile(rb"/Contents\s+(\d+) 0 R")
 _STREAM_RE = re.compile(rb"stream\r?\n(.*?)endstream", re.S)
 _XOBJ_MAP_RE = re.compile(rb"/XObject\s*<<(.*?)>>", re.S)
@@ -84,14 +89,33 @@ def count_pages(data: bytes) -> int:
     return data.count(b"/Type /Page ")
 
 
+def _closed_end(data: bytes, closer: bytes) -> int:
+    """End of the last ``closer`` in ``data`` (0 if none). A lazy
+    ``opener(.*?)closer`` pattern searched only up to here finds the same
+    matches — every match ends with a closer — but an opener with no
+    closer after it fails at once instead of rescanning to the end of
+    the payload, which made a payload of unterminated openers cost time
+    quadratic in its size."""
+    end = data.rfind(closer)
+    return 0 if end < 0 else end + len(closer)
+
+
+def _search_closed(pattern: re.Pattern, closer: bytes, data: bytes) -> re.Match | None:
+    return pattern.search(data, 0, _closed_end(data, closer))
+
+
 def _objects(data: bytes) -> dict[int, bytes]:
-    return {int(m.group(1)): m.group(2) for m in _OBJ_RE.finditer(data)}
+    """Object number -> body of every ``N 0 obj <body> endobj``, the body
+    without its surrounding whitespace (``bytes.rstrip`` strips exactly
+    the regex's ``\\s`` set)."""
+    end = _closed_end(data, b"endobj")
+    return {int(m.group(1)): m.group(2).rstrip() for m in _OBJ_RE.finditer(data, 0, end)}
 
 
 def _page_object_numbers(objects: dict[int, bytes]) -> list[int]:
     for body in objects.values():
         if b"/Type /Pages" in body:
-            kids = _KIDS_RE.search(body)
+            kids = _search_closed(_KIDS_RE, b"]", body)
             if kids:
                 return [int(m.group(1)) for m in _REF_RE.finditer(kids.group(1))]
     raise PdfParseError("no /Type /Pages object with /Kids found")
@@ -136,7 +160,7 @@ def parse_pdf(
 
         # XObject name -> (id, width, height) from the object graph
         xobjects: dict[bytes, tuple[str, int, int]] = {}
-        xmap = _XOBJ_MAP_RE.search(body)
+        xmap = _search_closed(_XOBJ_MAP_RE, b">>", body)
         if xmap:
             for entry in _XOBJ_ENTRY_RE.finditer(xmap.group(1)):
                 res_name, objnum = entry.group(1), int(entry.group(2))
@@ -153,7 +177,9 @@ def parse_pdf(
         cm = _CONTENTS_RE.search(body)
         if not cm:
             raise PdfParseError(f"page {page_index} has no /Contents")
-        stream_m = _STREAM_RE.search(objects.get(int(cm.group(1)), b""))
+        stream_m = _search_closed(
+            _STREAM_RE, b"endstream", objects.get(int(cm.group(1)), b"")
+        )
         if not stream_m:
             raise PdfParseError(f"page {page_index} content stream missing")
         stream = stream_m.group(1)
@@ -213,9 +239,13 @@ def parse_pdf(
             prev_anchor = anchor
             prev_col_left = is_left
 
-        # images array in reading order (matches Mistral's per-page list)
-        ordered_ids = [p for a, x, k, p in ordered if k == "image"]
-        images.sort(key=lambda im: ordered_ids.index(im["id"]))
+        # images array in reading order (matches Mistral's per-page list):
+        # ids ranked by first appearance, in one pass over the flow
+        rank: dict[str, int] = {}
+        for a, x, k, p in ordered:
+            if k == "image":
+                rank.setdefault(p, len(rank))
+        images.sort(key=lambda im: rank[im["id"]])
 
         pages.append(
             {

@@ -30,11 +30,11 @@ from __future__ import annotations
 from .parser import (
     PdfParseError,
     _CONTENTS_RE,
-    _KIDS_RE,
-    _OBJ_RE,
-    _REF_RE,
     _XOBJ_ENTRY_RE,
     _XOBJ_MAP_RE,
+    _objects,
+    _page_object_numbers,
+    _search_closed,
 )
 
 
@@ -47,21 +47,8 @@ class PdfSlicer:
     ~19% of skew-corpus pipeline wall at chunk granularity 16)."""
 
     def __init__(self, data: bytes):
-        self.objects = {
-            int(m.group(1)): m.group(2) for m in _OBJ_RE.finditer(data)
-        }
-        page_nums = None
-        for body in self.objects.values():
-            if b"/Type /Pages" in body:
-                kids = _KIDS_RE.search(body)
-                if kids:
-                    page_nums = [
-                        int(m.group(1)) for m in _REF_RE.finditer(kids.group(1))
-                    ]
-                    break
-        if page_nums is None:
-            raise PdfParseError("no /Type /Pages object with /Kids found")
-        self.page_nums = page_nums
+        self.objects = _objects(data)
+        self.page_nums = _page_object_numbers(self.objects)
         self._next_obj_num = max(self.objects) + 1
 
     def slice(self, page_lo: int, page_hi: int) -> bytes:
@@ -86,7 +73,7 @@ class PdfSlicer:
             cm = _CONTENTS_RE.search(body)
             if cm:
                 needed.append(int(cm.group(1)))
-            xmap = _XOBJ_MAP_RE.search(body)
+            xmap = _search_closed(_XOBJ_MAP_RE, b">>", body)
             if xmap:
                 for entry in _XOBJ_ENTRY_RE.finditer(xmap.group(1)):
                     needed.append(int(entry.group(2)))

@@ -5,18 +5,21 @@ The DAG (SURVEY.md §3.4), two routes by payload size::
     scan(pages) -> anti-join checkpoint -> lang/payload filter
       |- octet_length(html) <= giant_bytes (all but the heavy tail):
       |    fused document stage, ONE mapInPandas (operators/document.py):
-      |    parse -> assemble -> enhance -> split -> bibtex, no shuffle
+      |    parse -> process_markdown -> enhance -> split -> bibtex,
+      |    no shuffle
       '- octet_length(html) > giant_bytes (giant PDFs), or a url on more
-         than one row (merged into one document, as the groupBy always did):
+         than one row (a re-crawl: its latest row is the document):
            repartition(url) (SQL only: the scan stage runs no Python)
-           -> chunk-plan -> spread repartition(n, url, page_lo)
-           -> mapInPandas parse -> per-page SQL ops (narrow)
+           -> max_by aggregate: latest crawl per url (same exchange)
+           -> mapInPandas chunk-plan -> spread repartition(n, url, page_lo)
+           -> mapInPandas parse (one row per page)
            -> groupBy(url) sorted collect_list (reassembly shuffle)
-           -> assemble (SQL) -> convert pUDF (enhance+split+bibtex)
+           -> mapInPandas: process_markdown -> enhance -> split -> bibtex
       -> union -> write output + lineage + checkpoint commit
 
-Both routes convert through ``operators.enhance.convert_document``, so
-they are byte-identical by construction (tested column by column).
+Both routes build their rows through ``operators.document.document_row``
+(the oracle's ``process_markdown``, then ``convert_document``), so they
+are byte-identical by construction (tested column by column).
 
 Resumability: documents hash into ``n_buckets`` by url; buckets are
 processed in ``n_groups`` commit groups. Each group appends its output,
@@ -37,8 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.assemble import assemble_documents
-from ..operators.document import DOCUMENT_COLUMNS, convert_payloads
-from ..operators.enhance import CONVERT_FIELDS, convert_udf
+from ..operators.document import convert_payloads
 from ..operators.parse import DEFAULT_CHUNK_PAGES, DEFAULT_GIANT_BYTES, chunked_pages
 from ..schema import CHECKPOINT
 from ..sources.pages import read_pages, select_extractable, with_bucket
@@ -67,10 +69,10 @@ def extract_documents(
     if giant_bytes is None:
         giant_bytes = DEFAULT_GIANT_BYTES
     selected = select_extractable(pages, langs=langs)
-    # a url on more than one row takes the per-page route too, whose
-    # groupBy(url) keeps the output at one row per url; finding those urls
-    # scans only the url/lang columns, and the broadcast leaves every
-    # other row's payload where the scan put it
+    # a url on more than one row takes the per-page route too, which
+    # keeps its latest row; finding those urls scans only the url/lang
+    # columns, and the broadcast leaves every other row's payload where
+    # the scan put it
     repeated = (
         pages.filter(F.col("lang").isin(*langs)).groupBy("url").count()
         .filter(F.col("count") > 1).select("url", F.lit(True).alias("repeated"))
@@ -78,15 +80,9 @@ def extract_documents(
     routed = selected.join(F.broadcast(repeated), "url", "left")
     per_page = F.col("repeated").isNotNull() | (F.octet_length("html") > giant_bytes)
     small = convert_payloads(routed.filter(~per_page), mode)
-
-    # per-page route: quarantined rows carry err != null and null markdown;
-    # the UDF passes None through, so one linear plan serves both outcomes
-    docs = assemble_documents(
-        chunked_pages(routed.filter(per_page), chunk_pages, spread_partitions)
+    giant = assemble_documents(
+        chunked_pages(routed.filter(per_page), chunk_pages, spread_partitions), mode
     )
-    docs = docs.withColumn("res", convert_udf(mode))
-    converted = {c: F.col(f"res.{c}").alias(c) for c in CONVERT_FIELDS}
-    giant = docs.select(*(converted.get(c, c) for c in DOCUMENT_COLUMNS))
     return small.unionByName(giant)
 
 

@@ -1,33 +1,13 @@
 """Spark schemas — the §1.4 data model of SURVEY.md.
 
-OcrImage/OcrPage/OcrResult mirror ``src/types/interfaces.ts:103-132`` of
-the reference; the pages input shape is the BASELINE.json ``input_hint``.
-Image descriptions travel as ``array<struct<id,desc>>`` rather than
-``MapType`` (Arrow boundary caveat, SURVEY.md §1.2).
+The pages input shape is the BASELINE.json ``input_hint``. A parsed page
+row carries only what conversion reads of the reference's OcrPage
+(``src/types/interfaces.ts:103-132``): index, markdown and image ids.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import types as T
-
-OCR_IMAGE = T.StructType(
-    [
-        T.StructField("id", T.StringType()),
-        T.StructField("base64", T.StringType()),
-        T.StructField("top_left_x", T.IntegerType()),
-        T.StructField("top_left_y", T.IntegerType()),
-        T.StructField("bottom_right_x", T.IntegerType()),
-        T.StructField("bottom_right_y", T.IntegerType()),
-    ]
-)
-
-PAGE_DIMENSIONS = T.StructType(
-    [
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("dpi", T.IntegerType()),
-    ]
-)
 
 # one row per parsed page of a giant document — the unit of parallelism
 # between the range parse and the groupBy-sort reassembly (SURVEY.md §3.4)
@@ -36,8 +16,7 @@ PAGE_ROW = T.StructType(
         T.StructField("url", T.StringType(), False),
         T.StructField("page_index", T.IntegerType()),
         T.StructField("page_markdown", T.StringType()),
-        T.StructField("images", T.ArrayType(OCR_IMAGE)),
-        T.StructField("dimensions", PAGE_DIMENSIONS),
+        T.StructField("image_ids", T.ArrayType(T.StringType())),
         T.StructField("model", T.StringType()),
         T.StructField("err", T.StringType()),
         T.StructField("bytes_in", T.LongType()),
@@ -86,7 +65,7 @@ CONVERTED = T.StructType(
 )
 
 # one extracted document: the output row of plans/extract.extract_documents,
-# emitted directly by the fused document stage (operators/document.py)
+# built on both routes by operators/document.document_row
 DOCUMENT_ROW = T.StructType(
     [
         T.StructField("url", T.StringType(), False),
@@ -99,13 +78,6 @@ DOCUMENT_ROW = T.StructType(
         T.StructField("bytes_in", T.LongType()),
         T.StructField("parse_partition", T.IntegerType()),
         T.StructField("parse_wall_ms", T.LongType()),
-    ]
-)
-
-DESC_ENTRY = T.StructType(
-    [
-        T.StructField("id", T.StringType()),
-        T.StructField("desc", T.StringType()),
     ]
 )
 

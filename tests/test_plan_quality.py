@@ -10,6 +10,8 @@ that silently turns the broadcast into a sort-merge join or drags the
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -102,8 +104,25 @@ def _probe_chain(node) -> tuple[list[str], list]:
     return chain, builds
 
 
+# every Python exec node: MapInPandas, MapInArrow, ArrowEvalPython,
+# BatchEvalPython(UDTF), FlatMap(Co)GroupsInPandas/InArrow,
+# ArrowAggregatePython, ArrowWindowPython, ...
+_PYTHON_NODE = re.compile(r"\w*(?:Python|In(?:Pandas|Arrow))(?:UDTF|WithState)?")
+
+
 def _is_python(line: str) -> bool:
-    return line.startswith(("MapInPandas", "ArrowEvalPython", "BatchEvalPython"))
+    return _PYTHON_NODE.fullmatch(line.split(" ", 1)[0]) is not None
+
+
+def test_is_python_matches_every_python_node():
+    python = [
+        "MapInPandas gen(url#1)", "MapInArrow f(url#1)", "ArrowEvalPython [f(x#1)]",
+        "BatchEvalPython [f(x#1)]", "FlatMapGroupsInPandas [url#1], f(url#1)",
+        "FlatMapCoGroupsInArrow [url#1], f(url#1)", "ArrowAggregatePython [url#1]",
+        "ArrowWindowPython [f(x#1)]", "ArrowEvalPythonUDTF [x#1]",
+    ]
+    sql = ["Exchange hashpartitioning(url#1, 8)", "HashAggregate(keys=[url#1])", "Project [url#1]"]
+    assert all(map(_is_python, python)) and not any(map(_is_python, sql))
 
 
 def test_assemble_is_single_shuffle(spark, pages_path):
@@ -113,8 +132,10 @@ def test_assemble_is_single_shuffle(spark, pages_path):
     first Python node (so their scan stage starts no Python worker), a
     by-number spread repartition (AQE never coalesces it), and the
     groupBy(url) reassembly — the only ENSURE_REQUIREMENTS exchange on
-    either route. The repeated-url set both routes join is broadcast,
-    SQL only, and never reads the payload column."""
+    either route; their Python nodes are the chunk planner, the parse
+    and the reassembly, all MapInPandas. No scalar Python UDF is left in
+    the plan. The repeated-url set both routes join is broadcast, SQL
+    only, and never reads the payload column."""
     out = extract_documents(spark.read.parquet(pages_path))
     tree = _plan_tree(out._jdf.queryExecution().executedPlan())
     assert tree[0].startswith("Union") and len(tree[1]) == 2, tree[0]
@@ -130,6 +151,8 @@ def test_assemble_is_single_shuffle(spark, pages_path):
     # leaf (scan) upwards: the first exchange comes before the first Python node
     giant_chain, giant_builds = _probe_chain(giant)
     giant_up = giant_chain[::-1]
+    assert [s.split()[0] for s in giant_up if _is_python(s)] == ["MapInPandas"] * 3, giant_up
+    assert not any(s.startswith("ArrowEvalPython") for s in _walk(tree)), tree
     first_exchange = next(i for i, s in enumerate(giant_up) if s.startswith("Exchange"))
     first_python = next(i for i, s in enumerate(giant_up) if _is_python(s))
     assert first_exchange < first_python, giant_up

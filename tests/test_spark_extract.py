@@ -120,18 +120,50 @@ def test_routes_agree_on_every_column(spark, fixture_pages_path, mode):
 
 
 def test_repeated_url_yields_one_row(spark, fixture_pages_path):
-    """A url on more than one input row (a re-crawl) still yields one
-    output row: such urls take the per-page route, whose groupBy(url)
-    merges them, instead of one fused row per input row."""
+    """A url on more than one input row (a re-crawl) yields one output
+    row, converted from its latest row alone, as the oracle converts each
+    row on its own: an exact duplicate changes no column, a later crawl's
+    payload replaces the earlier one, and a row with no ``warc_ts`` counts
+    as the oldest."""
     pages = spark.read.parquet(fixture_pages_path)
-    repeated = pages.filter(F.col("url").isin(
-        "https://fixtures.test/html/w1",
+    a1, a2, w1 = (
         "https://fixtures.test/assemble/a1",
-        "https://fixtures.test/error/x1",
-    ))
-    urls = [r["url"] for r in extract_documents(pages.unionByName(repeated)).collect()]
-    assert len(urls) == len(set(urls))
-    assert set(urls) == {r["url"] for r in extract_documents(pages).collect()}
+        "https://fixtures.test/assemble/a2",
+        "https://fixtures.test/html/w1",
+    )
+    repeated = pages.filter(F.col("url").isin(w1, a1, "https://fixtures.test/error/x1"))
+
+    def rows(df):
+        out = [r.asDict(recursive=True) for r in extract_documents(df).collect()]
+        assert len(out) == len({r["url"] for r in out})
+        return {r["url"]: r for r in out}
+
+    single, doubled = rows(pages), rows(pages.unionByName(repeated))
+    assert set(doubled) == set(single)
+    diffs = [
+        (url, col, value, doubled[url][col])
+        for url, row in single.items()
+        for col, value in row.items()
+        if col not in RUN_LINEAGE and value != doubled[url][col]
+    ]
+    assert not diffs, diffs[:3]
+
+    # w1's payload re-crawled under a1 after every fixture row, and under
+    # a2 with no timestamp
+    w1_row = pages.filter(F.col("url") == w1)
+    recrawls = w1_row.withColumn("url", F.lit(a1)).withColumn(
+        "warc_ts", F.col("warc_ts") + F.expr("INTERVAL 365 DAYS")
+    ).unionByName(
+        w1_row.withColumn("url", F.lit(a2)).withColumn("warc_ts", F.lit(None))
+    )
+    got = rows(recrawls.unionByName(pages))
+    goldens = golden_outputs(process_images=False)
+    for url, golden in ((a1, goldens[w1]), (a2, goldens[a2])):
+        assert got[url]["title_validation"] == golden["bibtex_title_validation"], url
+        for col in ("markdown", "main_content", "backmatter", "appendix", "title",
+                    "page_count", "image_references", "model", "bibtex",
+                    "bibtex_key", "bibtex_formatted"):
+            assert got[url][col] == golden[col], (url, col)
 
 
 @pytest.mark.parametrize("giant_bytes", [None, 0], ids=["fused", "chunked"])
