@@ -194,19 +194,16 @@ def chunked_pages(
     (the greatest ``warc_ts``, nulls oldest; ties broken by the payload's
     ``xxhash64``), as when each crawl overwrites the last. The ``max_by``
     aggregate that keeps it runs on the ``repartition("url")`` below,
-    adding no exchange. (A ``row_number`` window there keeps the same
-    row, but with no document routed here it costs one more job and
-    task per operation.)
+    adding no exchange.
 
     The SQL-only ``repartition("url")`` on the input ends the scan stage
-    before any Python node, so scan tasks start no Python worker; with
-    no document routed here AQE coalesces that exchange to zero
-    partitions and the planner stage runs no task. The spread is a
-    repartition BY NUMBER (default: the context's ``defaultParallelism``),
-    which AQE never coalesces — a by-column repartition of a few MB of
-    chunks collapses into one task. The price: with no document routed
-    here the spread's ``spread_partitions`` empty tasks still start
-    Python workers.
+    before any Python node, so scan tasks start no Python worker. The
+    spread is a repartition BY NUMBER (default: the context's
+    ``defaultParallelism``), which AQE never coalesces — a by-column
+    repartition of a few MB of chunks collapses into one task.
+    plans/extract.py plans this route only when its routing query sent
+    a url here, so an extraction with no giant or re-crawled document
+    starts none of these stages.
     """
     latest = F.max_by(F.struct("kind", "html"), F.struct("warc_ts", F.xxhash64("html")))
     docs = df.repartition("url").groupBy("url").agg(latest.alias("doc")).select(

@@ -1,14 +1,20 @@
 """End-to-end extraction pipeline (C1) + checkpoint/resume (C4) + lineage (C2).
 
-The DAG (SURVEY.md §3.4), two routes by payload size::
+The DAG (SURVEY.md §3.4), two routes, decided on the driver::
+
+    scan(pages) -> anti-join checkpoint -> lang filter
+      -> routing query (SQL, collected on the driver as the plan is
+         built): groupBy(url) -> the urls on more than one row (a
+         re-crawl: its latest row is the document) or with an
+         extractable payload over giant_bytes
 
     scan(pages) -> anti-join checkpoint -> lang/payload filter
-      |- octet_length(html) <= giant_bytes (all but the heavy tail):
+      |- every url not routed (with none routed, the whole plan):
       |    fused document stage, ONE mapInPandas (operators/document.py):
       |    parse -> process_markdown -> enhance -> split -> bibtex,
       |    no shuffle
-      '- octet_length(html) > giant_bytes (giant PDFs), or a url on more
-         than one row (a re-crawl: its latest row is the document):
+      '- the routed urls, planned only when there are any (an IN list,
+         or a broadcast local relation when there are many):
            repartition(url) (SQL only: the scan stage runs no Python)
            -> max_by aggregate: latest crawl per url (same exchange)
            -> mapInPandas chunk-plan -> spread repartition(n, url, page_lo)
@@ -36,14 +42,15 @@ import time
 import uuid
 import warnings
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.assemble import assemble_documents
-from ..operators.document import convert_payloads
+from ..operators.document import check_mode, convert_payloads
 from ..operators.parse import DEFAULT_CHUNK_PAGES, DEFAULT_GIANT_BYTES, chunked_pages
 from ..schema import CHECKPOINT
-from ..sources.pages import read_pages, select_extractable, with_bucket
+from ..sources.pages import in_langs, payload_kind, read_pages, select_extractable, with_bucket
 
 OUTPUT_COLUMNS = [
     "url", "markdown", "main_content", "backmatter", "appendix", "title",
@@ -63,27 +70,55 @@ def extract_documents(
 ) -> DataFrame:
     """pages table (url, warc_ts, html, text, lang) -> extracted rows.
 
-    Pure transformation — no writes; reusable by tests, the driver entry
-    and the checkpointed runner below.
+    Writes nothing; reusable by tests, the driver entry and the
+    checkpointed runner below. It does run one job when called: the SQL
+    :func:`routing_query`, collected on the driver (an unknown ``mode``
+    fails before it). With no url routed, the plan is scan -> filter ->
+    the fused stage, with no union, join, exchange or per-page route.
     """
+    check_mode(mode)
     if giant_bytes is None:
         giant_bytes = DEFAULT_GIANT_BYTES
     selected = select_extractable(pages, langs=langs)
-    # a url on more than one row takes the per-page route too, which
-    # keeps its latest row; finding those urls scans only the url/lang
-    # columns, and the broadcast leaves every other row's payload where
-    # the scan put it
-    repeated = (
-        pages.filter(F.col("lang").isin(*langs)).groupBy("url").count()
-        .filter(F.col("count") > 1).select("url", F.lit(True).alias("repeated"))
+    routed = [r.url for r in routing_query(pages, langs, giant_bytes).collect()]
+    if not routed:
+        return convert_payloads(selected, mode)
+    small, tail = _split_routes(selected, routed)
+    return convert_payloads(small, mode).unionByName(
+        assemble_documents(chunked_pages(tail, chunk_pages, spread_partitions), mode)
     )
-    routed = selected.join(F.broadcast(repeated), "url", "left")
-    per_page = F.col("repeated").isNotNull() | (F.octet_length("html") > giant_bytes)
-    small = convert_payloads(routed.filter(~per_page), mode)
-    giant = assemble_documents(
-        chunked_pages(routed.filter(per_page), chunk_pages, spread_partitions), mode
+
+
+# Up to this many routed urls (a corpus's few giant PDFs) ride in the
+# plan as an IN list: no join and no job. A larger set becomes a
+# broadcast local relation, whose broadcast is one small job but which
+# plans in constant time, where an IN list costs ~1 ms a url to build.
+INLINE_URLS = 64
+
+
+def _split_routes(selected: DataFrame, routed: list[str]) -> tuple[DataFrame, DataFrame]:
+    """(fused-stage rows, per-page rows) of ``selected``."""
+    if len(routed) <= INLINE_URLS:
+        per_page = F.col("url").isin(routed)
+        return selected.filter(~per_page), selected.filter(per_page)
+    url_set = F.broadcast(selected.sparkSession.createDataFrame(
+        pa.table({"url": pa.array(routed, pa.string())})
+    ))
+    return selected.join(url_set, "url", "left_anti"), selected.join(url_set, "url", "left_semi")
+
+
+def routing_query(pages: DataFrame, langs: tuple[str, ...], giant_bytes: int) -> DataFrame:
+    """The urls whose documents take the per-page route: a url on more
+    than one row in ``langs`` (a re-crawl: its latest row is the
+    document), or one with an extractable payload over ``giant_bytes``."""
+    # the size test first: And stops there, so only giant payloads are sniffed
+    giant = (F.octet_length("html") > giant_bytes) & payload_kind(F.col("html")).isin("pdf", "html")
+    return (
+        in_langs(pages, langs).groupBy("url")
+        .agg(F.count(F.lit(1)).alias("rows"), F.bool_or(giant).alias("giant"))
+        .filter((F.col("rows") > 1) | F.col("giant"))
+        .select("url")
     )
-    return small.unionByName(giant)
 
 
 class _StageMetricsListener:

@@ -60,13 +60,20 @@ def payload_kind(html_col: Column) -> Column:
     )
 
 
+def in_langs(df: DataFrame, langs: tuple[str, ...]) -> DataFrame:
+    """The rows in ``langs`` that name a document: a row with no url has
+    nowhere to go in a table keyed by url, so it is dropped like an
+    empty payload. Both predicates push down to the scan."""
+    return df.filter(F.col("url").isNotNull() & F.col("lang").isin(*langs))
+
+
 def select_extractable(
     df: DataFrame, langs: tuple[str, ...] = ("en",)
 ) -> DataFrame:
-    """Filter to extractable rows: lang predicate first (pushes down to the
-    scan), then payload detection. Quarantined rows (empty/other payloads)
-    are dropped here; X-family fixtures assert they never reach the parse
-    stage."""
-    out = df.filter(F.col("lang").isin(*langs))
+    """Filter to extractable rows: the url and lang predicates first
+    (:func:`in_langs`, pushed down to the scan), then payload detection.
+    Quarantined rows (empty/other payloads) are dropped here; X-family
+    fixtures assert they never reach the parse stage."""
+    out = in_langs(df, langs)
     out = out.withColumn("kind", payload_kind(F.col("html")))
     return out.filter(F.col("kind").isin("pdf", "html"))

@@ -15,7 +15,9 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from paper2llm_spark.plans.extract import extract_documents
+from paper2llm_spark.operators.parse import DEFAULT_GIANT_BYTES
+from paper2llm_spark.plans import extract
+from paper2llm_spark.plans.extract import extract_documents, routing_query
 from paper2llm_spark.sources.pages import select_extractable
 
 
@@ -125,24 +127,45 @@ def test_is_python_matches_every_python_node():
     assert all(map(_is_python, python)) and not any(map(_is_python, sql))
 
 
-def test_assemble_is_single_shuffle(spark, pages_path):
-    """Two routes under one union. Non-giant documents: scan -> filter ->
-    ONE MapInPandas (the fused document stage), no shuffle, no other
-    Python node. Giant documents: a SQL-only repartition below their
-    first Python node (so their scan stage starts no Python worker), a
-    by-number spread repartition (AQE never coalesces it), and the
-    groupBy(url) reassembly — the only ENSURE_REQUIREMENTS exchange on
-    either route; their Python nodes are the chunk planner, the parse
-    and the reassembly, all MapInPandas. No scalar Python UDF is left in
-    the plan. The repeated-url set both routes join is broadcast, SQL
-    only, and never reads the payload column."""
-    out = extract_documents(spark.read.parquet(pages_path))
+def test_unrouted_extract_is_one_python_stage(spark, pages_path):
+    """No giant payload and no re-crawled url: the routing query, run on
+    the driver, finds nothing to route, so the executed plan is scan ->
+    filter -> ONE MapInPandas (the fused document stage), with no union,
+    no exchange and no join. The routing query itself is SQL only and
+    never reads ``text``."""
+    pages = spark.read.parquet(pages_path)
+    tree = _plan_tree(extract_documents(pages)._jdf.queryExecution().executedPlan())
+    nodes = list(_walk(tree))
+    assert [s.split()[0] for s in nodes if _is_python(s)] == ["MapInPandas"], nodes
+    assert not any(
+        s.startswith(("Union", "Exchange", "BroadcastExchange")) or "Join" in s.split()[0]
+        for s in nodes
+    ), nodes
+
+    routing = list(_walk(_plan_tree(
+        routing_query(pages, ("en",), DEFAULT_GIANT_BYTES)._jdf.queryExecution().executedPlan()
+    )))
+    assert not any(_is_python(s) for s in routing), routing
+    scans = [s for s in routing if s.startswith("FileScan")]
+    assert scans and not any("text" in s.split("ReadSchema: ")[1] for s in scans), scans
+
+
+def _two_routes(out) -> tuple[list, list]:
+    """Check the two-route plan of an extraction whose per-page route
+    has documents; returns the broadcast build subtrees of both routes.
+
+    Non-routed documents: scan -> filter -> ONE MapInPandas (the fused
+    document stage), no shuffle, no other Python node. Routed documents:
+    a SQL-only repartition below their first Python node (so their scan
+    stage starts no Python worker), a by-number spread repartition (AQE
+    never coalesces it), and the groupBy(url) reassembly — the only
+    ENSURE_REQUIREMENTS exchange on either route; their Python nodes are
+    the chunk planner, the parse and the reassembly, all MapInPandas. No
+    scalar Python UDF is left in the plan."""
     tree = _plan_tree(out._jdf.queryExecution().executedPlan())
     assert tree[0].startswith("Union") and len(tree[1]) == 2, tree[0]
-    small = next(
-        b for b in tree[1] if any("octet_length(html" in s and " <= " in s for s in _walk(b))
-    )
-    giant = next(b for b in tree[1] if b is not small)
+    giant = next(b for b in tree[1] if any("REPARTITION_BY_NUM" in s for s in _walk(b)))
+    small = next(b for b in tree[1] if b is not giant)
 
     small_chain, small_builds = _probe_chain(small)
     assert [s.split()[0] for s in small_chain if _is_python(s)] == ["MapInPandas"], small_chain
@@ -167,11 +190,32 @@ def test_assemble_is_single_shuffle(spark, pages_path):
     assert len(implicit) == 1 and "hashpartitioning(url" in implicit[0], implicit
     reassembly = giant_up.index(implicit[0])
     assert reassembly > giant_up.index(spread[0]), giant_up
+    return small_builds, giant_builds
 
-    builds = [s for b in small_builds + giant_builds for s in _walk(b)]
-    assert builds and not any(_is_python(s) for s in builds), builds
-    scans = [s for s in builds if s.startswith("FileScan")]
-    assert scans and not any("html" in s for s in scans), scans
+
+def test_assemble_is_single_shuffle(spark, pages_path):
+    """Every document routed (``giant_bytes=0``): the two-route plan of
+    :func:`_two_routes`. The routed urls are few, so they ride in the
+    plan as an IN list: no join and no broadcast on either route."""
+    out = extract_documents(spark.read.parquet(pages_path), giant_bytes=0)
+    _two_routes(out)
+    plan = _physical(out)
+    assert "BroadcastExchange" not in plan and "Join" not in plan
+    assert " IN (https://t/" in plan or " INSET https://t/" in plan, plan
+
+
+def test_routed_url_set_is_broadcast_local_relation(spark, pages_path, monkeypatch):
+    """Above ``INLINE_URLS`` routed urls, both routes join the url set as
+    a broadcast local relation: SQL only, no Python node, no scan."""
+    monkeypatch.setattr(extract, "INLINE_URLS", 0)
+    small_builds, giant_builds = _two_routes(
+        extract_documents(spark.read.parquet(pages_path), giant_bytes=0)
+    )
+    assert small_builds and giant_builds
+    for build in small_builds + giant_builds:
+        nodes = list(_walk(build))
+        assert nodes[-1].startswith("LocalTableScan"), nodes
+        assert not any(_is_python(s) or s.startswith("FileScan") for s in nodes), nodes
 
 
 def test_ivf_join_is_equi_join_not_cartesian(spark):

@@ -6,14 +6,18 @@ corpus"; target 100% of urls, both branches.
 
 from __future__ import annotations
 
+import uuid
+from datetime import datetime
+
 import pytest
 from pyspark.sql import functions as F
 
+from paper2llm_spark.operators.parse import DEFAULT_GIANT_BYTES
 from paper2llm_spark.oracle.pipeline import convert_ocr_result
 from paper2llm_spark.pdf.fixtures import fixture_docs, golden_outputs
 from paper2llm_spark.pdf.parser import parse_pdf
 from paper2llm_spark.pdf.writer import write_pdf
-from paper2llm_spark.plans.extract import extract_documents
+from paper2llm_spark.plans.extract import extract_documents, routing_query
 
 # lineage measurements of the run itself (task partition, batch wall),
 # not of the document: the only columns two routes may disagree on
@@ -100,8 +104,9 @@ def test_skew_split_byte_identical(spark, fixture_pages_path):
 def test_routes_agree_on_every_column(spark, fixture_pages_path, mode):
     """The fused document stage (default routing: every fixture is below
     ``giant_bytes``) and the chunk route (``giant_bytes=0``: plan,
-    spread, per-page parse, SQL reassembly, convert UDF) emit the same
-    row for every url, column by column — quarantine rows included."""
+    spread, per-page parse, groupBy reassembly through ``document_row``)
+    emit the same row for every url, column by column — quarantine rows
+    included."""
     pages = spark.read.parquet(fixture_pages_path)
 
     def rows(**kwargs):
@@ -164,6 +169,94 @@ def test_repeated_url_yields_one_row(spark, fixture_pages_path):
                     "page_count", "image_references", "model", "bibtex",
                     "bibtex_key", "bibtex_formatted"):
             assert got[url][col] == golden[col], (url, col)
+
+
+PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
+
+
+def _html(body: str) -> bytearray:
+    return bytearray(f"<html><body><h1>{body}</h1><p>{body} text</p></body></html>".encode())
+
+
+def _by_url(df) -> dict:
+    out = [r.asDict(recursive=True) for r in df.collect()]
+    assert len(out) == len({r["url"] for r in out})
+    return {r["url"]: r for r in out}
+
+
+def _same_but_lineage(got: dict, want: dict) -> list:
+    return [
+        (url, col, value, got[url][col])
+        for url, row in want.items()
+        for col, value in row.items()
+        if col not in RUN_LINEAGE and value != got[url][col]
+    ]
+
+
+def test_many_repeated_urls_convert_their_latest_row(spark):
+    """2000 re-crawled urls (a routed set far above ``INLINE_URLS``, so
+    it is broadcast): one row per url, equal in every column but the run
+    lineage to converting the latest row alone."""
+    old, new = (
+        [(f"https://t/r{i}", datetime(2024 + k, 1, 1), _html(f"crawl {k} of {i}"), "", "en")
+         for i in range(2000)]
+        for k in (0, 1)
+    )
+    alone = _by_url(extract_documents(spark.createDataFrame(new, PAGES_SCHEMA)))
+    out = extract_documents(spark.createDataFrame(old + new, PAGES_SCHEMA))
+    assert "LocalTableScan" in out._jdf.queryExecution().executedPlan().toString()
+    got = _by_url(out)
+    assert set(got) == set(alone) and len(got) == 2000
+    assert not _same_but_lineage(got, alone)
+
+
+def test_url_repeated_only_in_another_language_stays_fused(spark):
+    """A url with one ``en`` row and one ``fr`` row is not a re-crawl of
+    the extracted language: nothing is routed, and the plan is the fused
+    stage alone."""
+    rows = [
+        ("https://t/u", datetime(2024, 1, 1), _html("english"), "", "en"),
+        ("https://t/u", datetime(2025, 1, 1), _html("french"), "", "fr"),
+    ]
+    pages = spark.createDataFrame(rows, PAGES_SCHEMA)
+    assert routing_query(pages, ("en",), DEFAULT_GIANT_BYTES).collect() == []
+    out = extract_documents(pages)
+    assert "Union" not in out._jdf.queryExecution().executedPlan().toString()
+    alone = _by_url(extract_documents(spark.createDataFrame(rows[:1], PAGES_SCHEMA)))
+    assert not _same_but_lineage(_by_url(out), alone)
+
+
+def test_null_url_rows_are_dropped(spark):
+    """A row with no url names no document (the output is keyed by url):
+    small or giant, it is dropped before routing instead of failing the
+    job, and every other row converts as it does alone."""
+    nulls = [(None, None, _html(f"small {i}"), "", "en") for i in range(2)]
+    nulls.append((None, None, _html("giant " + "x" * 400), "", "en"))
+    recrawl = [("https://t/r", datetime(2024 + k, 1, 1), _html(f"r{k}"), "", "en") for k in (0, 1)]
+    giant = [("https://t/g", None, _html("giant " + "y" * 400), "", "en")]
+    pages = spark.createDataFrame(nulls + recrawl + giant, PAGES_SCHEMA)
+    routed = {r.url for r in routing_query(pages, ("en",), 200).collect()}
+    assert routed == {"https://t/r", "https://t/g"}
+
+    got = _by_url(extract_documents(pages, giant_bytes=200))
+    alone = _by_url(extract_documents(spark.createDataFrame(recrawl[1:] + giant, PAGES_SCHEMA)))
+    assert set(got) == set(alone) == routed
+    assert not _same_but_lineage(got, alone)
+
+
+def test_unknown_mode_fails_before_any_job(spark, fixture_pages_path):
+    """The mode is checked on the driver before the routing query runs."""
+    pages = spark.read.parquet(fixture_pages_path)
+    sc = spark.sparkContext
+    group = f"unknown-mode-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "extract_documents with an unknown mode")
+    try:
+        with pytest.raises(ValueError, match="bogus"):
+            extract_documents(pages, mode="bogus")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 @pytest.mark.parametrize("giant_bytes", [None, 0], ids=["fused", "chunked"])
