@@ -45,11 +45,12 @@ def main() -> None:
         SECTION_SUFFIX, section_content,
     )
     from paper2llm_spark.plans.extract import extract_documents
+    from paper2llm_spark.schema import PAGES
 
     name = os.path.basename(args.file)
     pages = spark.createDataFrame(
         [(f"file://{os.path.abspath(args.file)}", None, payload, "", "en")],
-        "url string, warc_ts timestamp, html binary, text string, lang string",
+        PAGES,
     )
     out = extract_documents(pages, mode=args.mode)
     row = out.select(

@@ -105,8 +105,9 @@ def image_context_e4(page_md: Column, image_id: Column) -> Column:
 
     NOTE: Spark ``length``/``substring`` count code points while JS counts
     UTF-16 units — identical for BMP text; the byte-identical pipeline
-    path uses the UTF-16-exact oracle inside the pandas UDF instead
-    (operators/enhance.py), this twin serves SQL-side analytics."""
+    path runs the UTF-16-exact oracle inside its ``mapInPandas`` instead
+    (``oracle.pipeline.convert_ocr_result`` via operators/document.py),
+    this twin serves SQL-side analytics."""
     first = F.split(image_id, "-").getItem(0)
     label = F.when(first != "", first).otherwise(F.lit("unknown"))
     page_text = F.when(

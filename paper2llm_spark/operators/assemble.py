@@ -9,9 +9,9 @@ chunk by chunk, operators/parse.chunked_pages) the Spark shape is:
   page_index, page_markdown, image_ids)))`` (page_index leads the struct,
   so the sort is page order; skew-split page ranges reassemble exactly,
   SURVEY.md §2.3), with the parse lineage aggregated per url;
-* one ``mapInPandas`` that hands each document to
-  ``operators.document.document_row``: the oracle's own
-  ``process_markdown``, then ``convert_document`` — the fused stage's row
+* one ``mapInPandas`` that rebuilds each document's OCR struct from its
+  sorted pages and hands it to ``operators.document.document_row`` — the
+  oracle's own ``convert_ocr_result``, and the fused stage's row
   builder, so both routes agree byte for byte by construction.
 
 A single groupBy handles good and quarantined documents alike:
@@ -67,8 +67,12 @@ def assemble_documents(pages_df: DataFrame, mode: str = "placeholder") -> DataFr
                 if err is not None:
                     rows.append(quarantine_row(lineage, err))
                     continue
-                pages = [(p["page_index"], p["page_markdown"], p["image_ids"]) for p in pages]
-                rows.append({**lineage, **document_row(pages, model, mode)})
+                ocr = {"model": model, "pages": [
+                    {"index": p["page_index"], "markdown": p["page_markdown"],
+                     "images": [{"id": i} for i in p["image_ids"]]}
+                    for p in pages
+                ]}
+                rows.append({**lineage, **document_row(ocr, mode)})
             yield pd.DataFrame(rows, columns=DOCUMENT_COLUMNS)
 
     return grouped.mapInPandas(gen, schema=DOCUMENT_ROW)

@@ -1,20 +1,20 @@
 """Document rows — one row builder for both routes, and the fused stage.
 
 The reference converts a document in one call: OCR pages ->
-``processMarkdown`` -> enhance -> split/bibtex (pdf-to-md.ts:22-170,
-mirrored by ``oracle.pipeline.convert_ocr_result``). :func:`document_row`
-is that call after the parse: the oracle's own ``process_markdown``, then
-``operators.enhance.convert_document``. Both routes of plans/extract.py
-build every output row through it, so they are byte-identical by
-construction (tests/test_spark_extract.py checks every output column):
+``processMarkdown`` -> enhance -> split/bibtex (pdf-to-md.ts:22-170).
+The oracle mirrors that call as ``oracle.pipeline.convert_ocr_result``,
+and :func:`document_row` is that function, run on the parser's OCR
+struct. Both routes of plans/extract.py build every output row through
+it, so they are byte-identical to the oracle by construction
+(tests/test_spark_extract.py checks every output column):
 
 * the fused document stage, :func:`convert_payloads` — every document
   whose payload fits one task (all but the giant-PDF tail) is parsed
   and converted inside ONE ``mapInPandas``, crossing Arrow once each way
   and never crossing a shuffle;
 * the giant/re-crawl tail, ``operators.assemble.assemble_documents`` —
-  pages parsed chunk by chunk are grouped by url and handed to the same
-  builder.
+  pages parsed chunk by chunk are grouped by url, rebuilt into one OCR
+  struct per document and handed to the same builder.
 
 Why fuse: each Python task pays a fixed set-up cost before it runs a
 row (pyspark's worker set-up calls ``importlib.invalidate_caches()``,
@@ -32,10 +32,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..html_extract import html_to_ocr_result
-from ..oracle.assemble import process_markdown
+from ..oracle.pipeline import convert_ocr_result
 from ..pdf.parser import parse_pdf
 from ..schema import DOCUMENT_ROW
-from .enhance import convert_document
 
 DOCUMENT_COLUMNS = DOCUMENT_ROW.fieldNames()
 MODES = ("placeholder", "descriptions")
@@ -47,23 +46,13 @@ def check_mode(mode: str) -> None:
         raise ValueError(f"unknown enhancement mode {mode!r}")
 
 
-def document_row(pages, model, mode: str) -> dict:
-    """Pages of one document, in page order -> its converted columns.
-
-    ``pages`` is ``(index, markdown, image_ids)`` per page. Returns every
-    DOCUMENT_ROW column but the url and the lineage columns.
-    """
-    assembled = process_markdown({
-        "model": model,
-        "pages": [{"index": index, "markdown": md} for index, md, _ in pages],
-    })
-    row = convert_document(assembled["markdown"], mode, [(md, ids) for _, md, ids in pages])
-    row.update(
-        page_count=assembled["page_count"],
-        image_references=assembled["image_references"],
-        model=assembled["model"],
-        err=None,
-    )
+def document_row(ocr: dict, mode: str) -> dict:
+    """The OCR struct of one document (``{"model", "pages": [{"index",
+    "markdown", "images": [{"id"}]}]}``) -> every DOCUMENT_ROW column but
+    the url and the lineage columns."""
+    row = convert_ocr_result(ocr, process_images=mode == "descriptions")
+    row["title_validation"] = row.pop("bibtex_title_validation")
+    row["err"] = None
     return row
 
 
@@ -103,11 +92,7 @@ def convert_payloads(df: DataFrame, mode: str) -> DataFrame:
                     continue
                 finally:
                     parse_s += time.monotonic() - t0
-                pages = [
-                    (p["index"], p["markdown"], [im["id"] for im in p["images"]])
-                    for p in ocr["pages"]
-                ]
-                rows.append({**lineage, **document_row(pages, ocr["model"], mode)})
+                rows.append({**lineage, **document_row(ocr, mode)})
             wall_ms = int(parse_s * 1000)
             for r in rows:
                 r["parse_wall_ms"] = wall_ms

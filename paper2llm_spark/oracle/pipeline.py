@@ -19,8 +19,7 @@ from typing import Any
 from .assemble import process_markdown
 from .bibtex import PINNED_YEAR, generate_bibtex_from_markdown
 from .enhance import build_image_context_map, enhance_image_references
-from .export import calculate_image_metrics
-from .splitter import get_markdown_sections_metadata, split_markdown_content
+from .splitter import split_markdown_content
 from .vision import describe_images
 
 
@@ -37,6 +36,11 @@ def convert_ocr_result(
     placeholder-enhance (:69-133), then the sectioning/bibtex surface the
     web app derives from the result (markdown-splitter, bibtex-generator,
     content-utils).
+
+    The keys are exactly the converted columns of ``schema.DOCUMENT_ROW``
+    (``bibtex_title_validation`` is its ``title_validation``): the
+    pipeline's row builder, ``operators.document.document_row``, is this
+    function.
     """
     md_result = process_markdown(ocr_result)
 
@@ -60,13 +64,10 @@ def convert_ocr_result(
             )  # :125-133
 
     sections = split_markdown_content(enhanced)
-    metadata = get_markdown_sections_metadata(enhanced)
     bibtex = generate_bibtex_from_markdown(enhanced, now_year=now_year)
-    metrics = calculate_image_metrics(enhanced)
 
     return {
         "markdown": enhanced,
-        "assembled_markdown": md_result["markdown"],
         "image_references": md_result["image_references"],
         "page_count": md_result["page_count"],
         "model": md_result["model"],
@@ -74,11 +75,8 @@ def convert_ocr_result(
         "backmatter": sections["backmatter"],
         "appendix": sections["appendix"],
         "title": sections["title"],
-        "word_count_total": metadata["word_count"]["total"],
         "bibtex": bibtex["bibtex"],
         "bibtex_key": bibtex["entry"]["key"],
         "bibtex_formatted": bibtex["formatted_entry"],
         "bibtex_title_validation": bibtex["title_validation"],
-        "image_count": metrics["original_image_count"],
-        "described_image_count": metrics["described_image_count"],
     }

@@ -11,8 +11,7 @@ The DAG (SURVEY.md §3.4), two routes, decided on the driver::
     scan(pages) -> anti-join checkpoint -> lang/payload filter
       |- every url not routed (with none routed, the whole plan):
       |    fused document stage, ONE mapInPandas (operators/document.py):
-      |    parse -> process_markdown -> enhance -> split -> bibtex,
-      |    no shuffle
+      |    parse -> the oracle's convert_ocr_result, no shuffle
       '- the routed urls, planned only when there are any (an IN list,
          or a broadcast local relation when there are many):
            repartition(url) (SQL only: the scan stage runs no Python)
@@ -20,12 +19,13 @@ The DAG (SURVEY.md §3.4), two routes, decided on the driver::
            -> mapInPandas chunk-plan -> spread repartition(n, url, page_lo)
            -> mapInPandas parse (one row per page)
            -> groupBy(url) sorted collect_list (reassembly shuffle)
-           -> mapInPandas: process_markdown -> enhance -> split -> bibtex
+           -> mapInPandas: the oracle's convert_ocr_result per document
       -> union -> write output + lineage + checkpoint commit
 
-Both routes build their rows through ``operators.document.document_row``
-(the oracle's ``process_markdown``, then ``convert_document``), so they
-are byte-identical by construction (tested column by column).
+Both routes build their rows through ``operators.document.document_row``,
+which is the oracle's ``convert_ocr_result`` (the one call the goldens
+are made with), so they are byte-identical by construction (tested
+column by column).
 
 Resumability: documents hash into ``n_buckets`` by url; buckets are
 processed in ``n_groups`` commit groups. Each group appends its output,
@@ -45,6 +45,7 @@ import warnings
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators.assemble import assemble_documents
 from ..operators.document import check_mode, convert_payloads
@@ -305,9 +306,19 @@ class CheckpointedExtractJob:
             return set()
         return {r["bucket"] for r in rows if r["status"] == "done"}
 
+    def _local_frame(self, rows: list[tuple], schema: T.StructType) -> DataFrame:
+        """``rows`` as a frame that plans as a ``LocalTableScan``: built
+        from a pyarrow table, where a list of tuples plans a Python-RDD
+        scan (``Scan ExistingRDD``) and a Python job for every write."""
+        columns = zip(*rows)
+        return self.spark.createDataFrame(
+            pa.table({name: list(col) for name, col in zip(schema.fieldNames(), columns)}),
+            schema,
+        )
+
     def _mark_done(self, buckets: list[int], run_id: str) -> None:
         rows = [(b, "done", run_id, None) for b in buckets]
-        df = self.spark.createDataFrame(rows, CHECKPOINT).withColumn(
+        df = self._local_frame(rows, CHECKPOINT).withColumn(
             "ts", F.current_timestamp()
         )
         self._write(df, self.checkpoint_path)
@@ -317,8 +328,9 @@ class CheckpointedExtractJob:
         if not rows:
             return
         self._write(
-            self.spark.createDataFrame(
-                [r + (run_id,) for r in rows], STAGE_METRICS_SCHEMA
+            self._local_frame(
+                [r + (run_id,) for r in rows],
+                T.StructType.fromDDL(STAGE_METRICS_SCHEMA),
             ).withColumn("ts", F.current_timestamp()),
             self.stage_metrics_path,
         )

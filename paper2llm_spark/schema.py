@@ -9,6 +9,18 @@ from __future__ import annotations
 
 from pyspark.sql import types as T
 
+# the pages table (BASELINE.json ``input_hint``): the schema the parquet
+# reader, the WARC parser and the incremental stream give every input
+PAGES = T.StructType(
+    [
+        T.StructField("url", T.StringType()),
+        T.StructField("warc_ts", T.TimestampType()),
+        T.StructField("html", T.BinaryType()),
+        T.StructField("text", T.StringType()),
+        T.StructField("lang", T.StringType()),
+    ]
+)
+
 # one row per parsed page of a giant document — the unit of parallelism
 # between the range parse and the groupBy-sort reassembly (SURVEY.md §3.4)
 PAGE_ROW = T.StructType(
@@ -48,49 +60,29 @@ TITLE_VALIDATION = T.StructType(
     ]
 )
 
-# enhance -> split -> bibtex result of one assembled document
-# (operators/enhance.convert_document)
-CONVERTED = T.StructType(
+# one extracted document: the output row of plans/extract.extract_documents,
+# built on both routes by operators/document.document_row. The columns
+# from ``markdown`` to ``title_validation`` are the keys of the oracle's
+# convert_ocr_result (its ``bibtex_title_validation`` is ``title_validation``)
+DOCUMENT_ROW = T.StructType(
     [
+        T.StructField("url", T.StringType(), False),
         T.StructField("markdown", T.StringType()),
         T.StructField("main_content", T.StringType()),
         T.StructField("backmatter", T.StringType()),
         T.StructField("appendix", T.StringType()),
         T.StructField("title", T.StringType()),
+        T.StructField("page_count", T.IntegerType()),
+        T.StructField("image_references", T.ArrayType(T.StringType())),
+        T.StructField("model", T.StringType()),
         T.StructField("bibtex", T.StringType()),
         T.StructField("bibtex_key", T.StringType()),
         T.StructField("bibtex_formatted", T.StringType()),
         T.StructField("title_validation", TITLE_VALIDATION),
-    ]
-)
-
-# one extracted document: the output row of plans/extract.extract_documents,
-# built on both routes by operators/document.document_row
-DOCUMENT_ROW = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        *CONVERTED.fields[:5],
-        T.StructField("page_count", T.IntegerType()),
-        T.StructField("image_references", T.ArrayType(T.StringType())),
-        T.StructField("model", T.StringType()),
-        *CONVERTED.fields[5:],
         T.StructField("err", T.StringType()),
         T.StructField("bytes_in", T.LongType()),
         T.StructField("parse_partition", T.IntegerType()),
         T.StructField("parse_wall_ms", T.LongType()),
-    ]
-)
-
-LINEAGE = T.StructType(
-    [
-        T.StructField("partition_id", T.IntegerType()),
-        T.StructField("url_range", T.StringType()),
-        T.StructField("doc_count", T.LongType()),
-        T.StructField("bytes_in", T.LongType()),
-        T.StructField("bytes_out", T.LongType()),
-        T.StructField("wall_ms", T.LongType()),
-        T.StructField("run_id", T.StringType()),
-        T.StructField("ts", T.TimestampType()),
     ]
 )
 

@@ -12,20 +12,24 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..schema import PAGES
+
 
 def read_pages(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
     """Scan the pages table: parquet locally; ``fmt='iceberg'`` on a
     cluster with an Iceberg catalog (same downstream plan either way);
     ``fmt='warc'`` parses raw crawl archives into the same shape
     (sources/warc.py) so a crawl feeds the pipeline with no conversion
-    job."""
+    job. Parquet is read with the fixed ``schema.PAGES``, so the call
+    submits no schema-inference job; a ``partitionBy`` column such as
+    ``bucket`` is still discovered from the paths."""
     if fmt == "iceberg":
         return spark.read.format("iceberg").load(path)
     if fmt == "warc":
         from .warc import read_warc
 
         return read_warc(spark, path)
-    return spark.read.parquet(path)
+    return spark.read.schema(PAGES).parquet(path)
 
 
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:

@@ -41,9 +41,7 @@ from datetime import datetime, timedelta, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-PAGES_SCHEMA = (
-    "url string, warc_ts timestamp, html binary, text string, lang string"
-)
+from ..schema import PAGES
 
 _WARC_EPOCH = datetime(2026, 1, 1, tzinfo=timezone.utc)
 _LANG_HEADER = "WARC-Identified-Content-Language"  # the Common Crawl header
@@ -193,7 +191,7 @@ def read_warc(
             if out["url"]:
                 yield flush(out)
 
-    return files.mapInPandas(parse, schema=PAGES_SCHEMA)
+    return files.mapInPandas(parse, schema=PAGES)
 
 
 # ---------------------------------------------------------------------------

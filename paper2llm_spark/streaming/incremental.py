@@ -17,19 +17,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
-from pyspark.sql import types as T
 
 from ..plans.extract import extract_documents
-
-PAGES_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("warc_ts", T.TimestampType()),
-        T.StructField("html", T.BinaryType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-    ]
-)
+from ..schema import PAGES
 
 
 def incremental_extract(
@@ -49,7 +39,7 @@ def incremental_extract(
     ckpt_path = os.path.join(output_dir, "stream_checkpoint")
 
     stream = (
-        spark.readStream.schema(PAGES_SCHEMA)
+        spark.readStream.schema(PAGES)
         .option("maxFilesPerTrigger", 8)
         .parquet(input_dir)
     )

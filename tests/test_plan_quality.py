@@ -218,6 +218,28 @@ def test_routed_url_set_is_broadcast_local_relation(spark, pages_path, monkeypat
         assert not any(_is_python(s) or s.startswith("FileScan") for s in nodes), nodes
 
 
+def test_runner_tables_are_local_relations(spark, pages_path, tmp_path, monkeypatch):
+    """The checkpointed runner builds its checkpoint and stage-metrics
+    rows from Arrow: each write plans a ``LocalTableScan``, never a scan
+    of a Python RDD (``Scan ExistingRDD``)."""
+    job = extract.CheckpointedExtractJob(
+        spark, pages_path, str(tmp_path / "out"), n_buckets=2, n_groups=1
+    )
+    plans: dict[str, list[str]] = {}
+    write = job._write
+
+    def recording_write(df, path):
+        plans.setdefault(path, []).append(_physical(df))
+        write(df, path)
+
+    monkeypatch.setattr(job, "_write", recording_write)
+    job.run()
+    for path in (job.checkpoint_path, job.stage_metrics_path):
+        assert plans.get(path), path
+        for plan in plans[path]:
+            assert "ExistingRDD" not in plan and "LocalTableScan" in plan, plan
+
+
 def test_ivf_join_is_equi_join_not_cartesian(spark):
     from paper2llm_spark.operators.similarity import ivf_topk
 

@@ -11,6 +11,7 @@ from datetime import datetime
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from paper2llm_spark.operators.parse import DEFAULT_GIANT_BYTES
 from paper2llm_spark.oracle.pipeline import convert_ocr_result
@@ -18,6 +19,8 @@ from paper2llm_spark.pdf.fixtures import fixture_docs, golden_outputs
 from paper2llm_spark.pdf.parser import parse_pdf
 from paper2llm_spark.pdf.writer import write_pdf
 from paper2llm_spark.plans.extract import extract_documents, routing_query
+from paper2llm_spark.schema import DOCUMENT_ROW, PAGES
+from paper2llm_spark.sources.pages import read_pages, with_bucket
 
 # lineage measurements of the run itself (task partition, batch wall),
 # not of the document: the only columns two routes may disagree on
@@ -290,3 +293,42 @@ def test_all_en_parsable_urls_present(placeholder_results):
         "https://fixtures.test/error/x4",  # junk payload
     }
     assert set(placeholder_results) == expected
+
+
+@pytest.mark.parametrize("process_images", [False, True], ids=["placeholder", "descriptions"])
+def test_oracle_keys_are_the_output_columns(process_images):
+    """The oracle's ``convert_ocr_result`` is the row builder, so it
+    returns exactly the converted columns of ``DOCUMENT_ROW``: every
+    column but the url, ``err`` and the lineage columns."""
+    converted = set(DOCUMENT_ROW.fieldNames()) - {
+        "url", "err", "bytes_in", "parse_partition", "parse_wall_ms",
+    }
+    goldens = golden_outputs(process_images=process_images)
+    assert goldens
+    for url, golden in goldens.items():
+        keys = {"title_validation" if k == "bibtex_title_validation" else k for k in golden}
+        assert keys == converted, url
+
+
+def test_read_pages_submits_no_job(spark, fixture_pages_path, tmp_path):
+    """A parquet pages table is read with the fixed ``PAGES`` schema: no
+    schema-inference job. A ``partitionBy("bucket")`` table keeps its
+    partition column."""
+    bucketed = str(tmp_path / "bucketed")
+    with_bucket(spark.read.parquet(fixture_pages_path), 4).write.partitionBy(
+        "bucket"
+    ).parquet(bucketed)
+    sc = spark.sparkContext
+    group = f"read-pages-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "read_pages on parquet")
+    try:
+        plain = read_pages(spark, fixture_pages_path)
+        by_bucket = read_pages(spark, bucketed)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert plain.schema == PAGES
+    assert by_bucket.schema == T.StructType(
+        PAGES.fields + [T.StructField("bucket", T.IntegerType())]
+    )
