@@ -15,10 +15,12 @@ chunk by chunk, operators/parse.chunked_pages) the Spark shape is:
   builder, so both routes agree byte for byte by construction.
 
 A single groupBy handles good and quarantined documents alike:
-``collect_list`` skips the NULL structs of error rows (and of the no-page
-row of an empty document, which converts to ``markdown ''`` and
-``page_count`` 0 like the oracle's), and ``max(err)`` surfaces any chunk
-failure for the url, so the parse subtree is evaluated exactly once.
+``collect_list`` skips the NULL structs of error rows and of the no-page
+row of an empty document (which converts to ``markdown ''`` and
+``page_count`` 0 like the oracle's). An error row carries its chunk's
+first page as ``page_index``, so ``min_by`` picks the first failing
+chunk's ``err`` — the first failing page's, the error a whole-document
+parse raises. The parse subtree is evaluated exactly once.
 """
 
 from __future__ import annotations
@@ -42,14 +44,14 @@ def assemble_documents(pages_df: DataFrame, mode: str = "placeholder") -> DataFr
     """
     check_mode(mode)
     grouped = pages_df.groupBy("url").agg(
-        # quarantine rows and the no-page row of an empty document carry
-        # page_index -1: no page struct, but the url still forms a group
+        # error rows and the no-page row of an empty document (page_index
+        # -1) give no page struct, but the url still forms a group
         F.sort_array(F.collect_list(F.when(
-            F.col("page_index") >= 0,
+            F.col("err").isNull() & (F.col("page_index") >= 0),
             F.struct("page_index", "page_markdown", "image_ids"),
         ))).alias("pages"),
         F.first("model", ignorenulls=True).alias("model"),
-        F.max("err").alias("err"),
+        F.min_by("err", F.when(F.col("err").isNotNull(), F.col("page_index"))).alias("err"),
         F.max("bytes_in").alias("bytes_in"),
         F.min("parse_partition").alias("parse_partition"),
         F.max("parse_wall_ms").alias("parse_wall_ms"),

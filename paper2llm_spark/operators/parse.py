@@ -4,14 +4,16 @@ The per-page route of the giant/re-crawl tail, SURVEY.md §3.4 / §4
 "Skew: giant PDFs": two ``mapInPandas`` stages with an explicit
 by-number repartition between them:
 
-1. :func:`plan_chunks` — cheap page-count scan; documents above
-   ``chunk_pages`` split into page-range chunk rows. AQE cannot see skew
-   inside a UDF, so the split is explicit; payload bytes are duplicated
-   only for the (rare) giant documents that need spreading.
+1. :func:`plan_chunks` — one object scan per PDF (pdf.slicer) reads
+   the parser's own page list; a PDF with more than ``chunk_pages``
+   pages becomes one byte-sliced chunk row per page range, every other
+   document one whole-payload row. AQE cannot see skew inside a UDF, so
+   the split is explicit; each page's bytes are shipped once.
 2. :func:`parse_chunks` — the real parse (PDF layout parse or HTML
-   boilerplate strip) producing one row per page with only what
-   conversion reads (index, markdown, image ids), carrying per-partition
-   lineage measurements (partition id, wall ms, bytes in).
+   boilerplate strip), one call per chunk, producing one row per page
+   with only what conversion reads (index, markdown, image ids),
+   carrying per-partition lineage measurements (partition id, wall ms,
+   bytes in).
 
 ``operators.assemble.assemble_documents`` then groups the pages by url
 and converts each document. The pipeline (plans/extract.py) sends every
@@ -36,74 +38,52 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..html_extract import html_to_ocr_result
-from ..pdf.parser import count_pages, parse_pdf
+from ..pdf.parser import parse_pdf
 from ..schema import CHUNK_ROW, PAGE_ROW
 
 DEFAULT_CHUNK_PAGES = 16
 
 
 def plan_chunks(df: DataFrame, chunk_pages: int = DEFAULT_CHUNK_PAGES) -> DataFrame:
-    """(url, kind, html) -> chunk rows; page_lo/page_hi inclusive, or
-    (0, -1) meaning "whole document" (html / small pdf). ``bytes_in`` is
-    the whole document's payload size on every chunk row, so lineage
-    reads the same whichever route a document took.
+    """(url, kind, html) -> chunk rows, each parsed from its first page
+    ``page_lo``. ``bytes_in`` is the whole document's payload size on
+    every chunk row, so lineage reads the same whichever route a document
+    took.
 
-    Split documents emit BYTE-SLICED chunk payloads (kind ``pdf_slice``,
-    pdf.slicer): each chunk row carries only its own pages' objects, so
-    the spread shuffle moves O(payload) total bytes instead of
-    O(payload x n_chunks) — the difference between ~2 GB and ~250 GB on
-    one 2000-page document. If slicing raises (payload the slicer can't
-    take apart), the planner falls back to full-payload chunk rows:
-    correctness never depends on the slicer, only shuffle volume does.
+    A PDF is split by the parser's own page list (``PdfSlicer.page_nums``,
+    read from ``/Kids`` as ``parse_pdf`` reads it): with more than
+    ``chunk_pages`` pages it becomes one BYTE-SLICED row (kind
+    ``pdf_slice``, pdf.slicer) per page range, each carrying only its own
+    pages' objects, so the spread shuffle moves O(payload) total bytes
+    instead of O(payload x n_chunks). Every other document — html, a
+    small PDF, or one the slicer cannot take apart — is one whole-payload
+    row (``page_lo`` 0), parsed exactly as the fused stage parses it.
     """
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..pdf.slicer import PdfSlicer
 
         for pdf_batch in batches:
-            out: dict[str, list[Any]] = {
-                "url": [], "kind": [], "page_lo": [], "page_hi": [],
-                "n_pages": [], "html": [], "bytes_in": [],
-            }
-
-            def emit(url, kind, lo, hi, n, chunk, nbytes):
-                out["url"].append(url)
-                out["kind"].append(kind)
-                out["page_lo"].append(lo)
-                out["page_hi"].append(hi)
-                out["n_pages"].append(n)
-                out["html"].append(chunk)
-                out["bytes_in"].append(nbytes)
-
+            rows = []
             for url, kind, payload in zip(
                 pdf_batch["url"], pdf_batch["kind"], pdf_batch["html"]
             ):
                 payload = bytes(payload)
-                nbytes = len(payload)
-                if kind != "pdf":
-                    emit(url, kind, 0, -1, 1, payload, nbytes)
-                    continue
-                try:
-                    n = count_pages(payload)
-                except Exception:
-                    n = 0  # parse stage will quarantine it
-                if n > chunk_pages:
+                chunks = [(kind, 0, payload)]
+                if kind == "pdf":
                     try:
                         slicer = PdfSlicer(payload)  # ONE object scan per doc
+                        n = len(slicer.page_nums)
+                        if n > chunk_pages:
+                            chunks = [
+                                ("pdf_slice", lo,
+                                 slicer.slice(lo, min(lo + chunk_pages, n) - 1))
+                                for lo in range(0, n, chunk_pages)
+                            ]
                     except Exception:
-                        slicer = None
-                    for lo in range(0, n, chunk_pages):
-                        hi = min(lo + chunk_pages, n) - 1
-                        try:
-                            if slicer is None:
-                                raise ValueError("unsliceable payload")
-                            emit(url, "pdf_slice", lo, hi, n,
-                                 slicer.slice(lo, hi), nbytes)
-                        except Exception:
-                            emit(url, kind, lo, hi, n, payload, nbytes)
-                else:
-                    emit(url, kind, 0, -1, n, payload, nbytes)
-            yield pd.DataFrame(out)
+                        pass  # one whole-payload row, parsed as the fused stage parses it
+                rows += [(url, k, lo, chunk, len(payload)) for k, lo, chunk in chunks]
+            yield pd.DataFrame(rows, columns=CHUNK_ROW.fieldNames())
 
     return df.select("url", "kind", "html").mapInPandas(gen, schema=CHUNK_ROW)
 
@@ -112,9 +92,14 @@ def parse_chunks(df: DataFrame) -> DataFrame:
     """Chunk rows -> page rows (PAGE_ROW schema). Pure function of the
     payload; task retries are safe (idempotent stage, SURVEY.md §4).
 
-    A document that parses to no pages (a PDF whose ``/Kids`` is empty)
-    emits one row with ``page_index`` -1 and no ``err``, so the url
-    survives reassembly as the oracle's empty document."""
+    A PDF chunk is one ``parse_pdf`` call whose page indexes start at the
+    chunk's ``page_lo``, so they are document-absolute. A chunk that
+    fails to parse emits one row with its ``page_lo`` as ``page_index``
+    and the error in ``err``: reassembly reports the first failing
+    chunk's error, which is the first failing page's, as a whole-document
+    parse does. A document that parses to no pages (a PDF whose ``/Kids``
+    is empty) emits one row with ``page_index`` -1 and no ``err``, so the
+    url survives reassembly as the oracle's empty document."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
@@ -126,36 +111,30 @@ def parse_chunks(df: DataFrame) -> DataFrame:
             t0 = time.monotonic()
             rows: list[dict[str, Any]] = []
 
-            def no_page(url, nbytes, model, err):
+            def no_page(url, index, nbytes, model, err):
                 rows.append({
-                    "url": url, "page_index": -1, "page_markdown": None,
+                    "url": url, "page_index": index, "page_markdown": None,
                     "image_ids": None, "model": model,
                     "err": err, "bytes_in": nbytes,
                     "parse_partition": partition_id, "parse_wall_ms": 0,
                 })
 
-            for url, kind, lo, hi, payload, nbytes in zip(
+            for url, kind, lo, payload, nbytes in zip(
                 pdf_batch["url"], pdf_batch["kind"], pdf_batch["page_lo"],
-                pdf_batch["page_hi"], pdf_batch["html"], pdf_batch["bytes_in"],
+                pdf_batch["html"], pdf_batch["bytes_in"],
             ):
                 payload = bytes(payload)
                 nbytes = int(nbytes)
                 try:
                     if kind == "html":
                         ocr = html_to_ocr_result(payload)
-                    elif kind == "pdf_slice":
-                        # byte-sliced chunk: pages restart at 0 inside the
-                        # slice; restore document-absolute indexes
-                        ocr = parse_pdf(payload, index_offset=int(lo))
-                    elif hi >= 0:
-                        ocr = parse_pdf(payload, int(lo), int(hi))
                     else:
-                        ocr = parse_pdf(payload)
+                        ocr = parse_pdf(payload, index_offset=int(lo))
                 except Exception as exc:  # quarantine (S6)
-                    no_page(url, nbytes, None, f"{type(exc).__name__}: {exc}")
+                    no_page(url, int(lo), nbytes, None, f"{type(exc).__name__}: {exc}")
                     continue
-                if not ocr["pages"] and hi < 0:
-                    no_page(url, nbytes, ocr["model"], None)
+                if not ocr["pages"]:
+                    no_page(url, -1, nbytes, ocr["model"], None)
                 for page in ocr["pages"]:
                     rows.append({
                         "url": url,
@@ -179,16 +158,13 @@ def parse_chunks(df: DataFrame) -> DataFrame:
 DEFAULT_GIANT_BYTES = 2_000_000
 
 
-def chunked_pages(
-    df: DataFrame,
-    chunk_pages: int = DEFAULT_CHUNK_PAGES,
-    spread_partitions: int | None = None,
-) -> DataFrame:
+def chunked_pages(df: DataFrame, chunk_pages: int = DEFAULT_CHUNK_PAGES) -> DataFrame:
     """Page rows of the per-page route, for the documents routed to it
-    (giant payloads and re-crawled urls): the page-range planner, then an
-    explicit spread repartition on (url, page_lo) so one 2000-page PDF
-    doesn't pin a single task — AQE can't see skew inside a UDF, so this
-    split is explicit (SURVEY.md §4).
+    (giant payloads and re-crawled urls): the planner splits each PDF by
+    its own page list, then an explicit spread repartition on
+    (url, page_lo) keeps one 2000-page PDF from pinning a single task —
+    AQE can't see skew inside a UDF, so this split is explicit
+    (SURVEY.md §4).
 
     A url on more than one input row is one document: its latest crawl
     (the greatest ``warc_ts``, nulls oldest; ties broken by the payload's
@@ -198,7 +174,7 @@ def chunked_pages(
 
     The SQL-only ``repartition("url")`` on the input ends the scan stage
     before any Python node, so scan tasks start no Python worker. The
-    spread is a repartition BY NUMBER (default: the context's
+    spread is a repartition BY NUMBER (the context's
     ``defaultParallelism``), which AQE never coalesces — a by-column
     repartition of a few MB of chunks collapses into one task.
     plans/extract.py plans this route only when its routing query sent
@@ -209,16 +185,13 @@ def chunked_pages(
     docs = df.repartition("url").groupBy("url").agg(latest.alias("doc")).select(
         "url", "doc.kind", "doc.html"
     )
-    chunks = plan_chunks(docs, chunk_pages)
-    if spread_partitions is None:
-        spread_partitions = df.sparkSession.sparkContext.defaultParallelism
-    return parse_chunks(chunks.repartition(spread_partitions, "url", "page_lo"))
+    spread = df.sparkSession.sparkContext.defaultParallelism
+    return parse_chunks(plan_chunks(docs, chunk_pages).repartition(spread, "url", "page_lo"))
 
 
 def parse_pages(
     df: DataFrame,
     chunk_pages: int = DEFAULT_CHUNK_PAGES,
-    spread_partitions: int | None = None,
     giant_bytes: int = DEFAULT_GIANT_BYTES,
 ) -> DataFrame:
     """Size-gated two-path parse stage, one row per page.
@@ -236,12 +209,8 @@ def parse_pages(
         "url",
         "kind",
         F.lit(0).alias("page_lo"),
-        F.lit(-1).alias("page_hi"),
-        F.lit(-1).alias("n_pages"),
         "html",
         F.octet_length("html").cast("long").alias("bytes_in"),
     )
     giant = df.filter(F.octet_length("html") > giant_bytes)
-    return parse_chunks(small).unionByName(
-        chunked_pages(giant, chunk_pages, spread_partitions)
-    )
+    return parse_chunks(small).unionByName(chunked_pages(giant, chunk_pages))

@@ -80,7 +80,8 @@ def _unescape_pdf_string(raw: bytes) -> str:
 
 
 def count_pages(data: bytes) -> int:
-    """Cheap page count for the skew-split planner (no full parse)."""
+    """Cheap page count from the first ``/Count`` (no full parse); the
+    chunk planner reads the page list itself (pdf.slicer.PdfSlicer)."""
     if data[:5] != b"%PDF-":
         raise PdfParseError("not a PDF payload (missing %PDF- magic)")
     m = _COUNT_RE.search(data)
@@ -130,12 +131,12 @@ def parse_pdf(
     """Parse PDF bytes into the OcrResult-shaped dict.
 
     ``page_lo``/``page_hi`` select an inclusive 0-based page-index range
-    (skew splitting of large documents); page ``index`` fields keep their
-    document-absolute values so reassembly-by-sort is exact
-    (SURVEY.md §2.3 ordering note). ``index_offset`` shifts emitted
-    indexes for byte-sliced chunk payloads (pdf.slicer), whose internal
-    page positions restart at 0 but whose document-absolute range starts
-    at the chunk's ``page_lo``.
+    (the reference a byte slice's parse is checked against); page
+    ``index`` fields keep their document-absolute values (SURVEY.md §2.3
+    ordering note). ``index_offset`` shifts emitted indexes, and the page
+    numbers in errors, for byte-sliced chunk payloads (pdf.slicer), whose
+    internal page positions restart at 0 but whose document-absolute
+    range starts at the chunk's ``page_lo``.
     """
     if data[:5] != b"%PDF-":
         raise PdfParseError("not a PDF payload (missing %PDF- magic)")
@@ -176,12 +177,12 @@ def parse_pdf(
 
         cm = _CONTENTS_RE.search(body)
         if not cm:
-            raise PdfParseError(f"page {page_index} has no /Contents")
+            raise PdfParseError(f"page {page_index + index_offset} has no /Contents")
         stream_m = _search_closed(
             _STREAM_RE, b"endstream", objects.get(int(cm.group(1)), b"")
         )
         if not stream_m:
-            raise PdfParseError(f"page {page_index} content stream missing")
+            raise PdfParseError(f"page {page_index + index_offset} content stream missing")
         stream = stream_m.group(1)
 
         # collect flow elements: (anchor_y, x, kind, payload)

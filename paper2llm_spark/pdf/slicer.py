@@ -18,11 +18,14 @@ indexes inside a slice restart at 0; the chunk row carries ``page_lo`` so
 the parse stage restores document-absolute indexes via ``index_offset``
 (reassembly-by-sort stays exact, SURVEY.md §2.3).
 
+The planner sizes its split from ``PdfSlicer.page_nums``, the parser's
+own page list; when the slicer raises, it ships the document once, as one
+whole-payload row, so correctness never depends on the slicer.
+
 For real-world PDFs (compressed xref streams, shared font/resource
 graphs) the same architecture holds — swap this regex slicer for a
 library page-extractor (qpdf/pikepdf) at the single seam
-:func:`slice_pdf`; the planner falls back to full-payload chunk rows
-whenever slicing raises, so correctness never depends on the slicer.
+:func:`slice_pdf`.
 """
 
 from __future__ import annotations

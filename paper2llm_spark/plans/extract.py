@@ -65,7 +65,6 @@ def extract_documents(
     *,
     mode: str = "placeholder",
     chunk_pages: int = DEFAULT_CHUNK_PAGES,
-    spread_partitions: int | None = None,
     langs: tuple[str, ...] = ("en",),
     giant_bytes: int | None = None,
 ) -> DataFrame:
@@ -86,7 +85,7 @@ def extract_documents(
         return convert_payloads(selected, mode)
     small, tail = _split_routes(selected, routed)
     return convert_payloads(small, mode).unionByName(
-        assemble_documents(chunked_pages(tail, chunk_pages, spread_partitions), mode)
+        assemble_documents(chunked_pages(tail, chunk_pages), mode)
     )
 
 

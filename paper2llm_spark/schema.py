@@ -37,14 +37,13 @@ PAGE_ROW = T.StructType(
     ]
 )
 
-# chunk plan rows (skew split of large PDFs by page ranges)
+# chunk plan rows (skew split of large PDFs by page ranges): a whole
+# payload (page_lo 0) or a byte slice of the pages from page_lo on
 CHUNK_ROW = T.StructType(
     [
         T.StructField("url", T.StringType(), False),
         T.StructField("kind", T.StringType()),
         T.StructField("page_lo", T.IntegerType()),
-        T.StructField("page_hi", T.IntegerType()),
-        T.StructField("n_pages", T.IntegerType()),
         T.StructField("html", T.BinaryType()),
         T.StructField("bytes_in", T.LongType()),
     ]

@@ -62,10 +62,31 @@ def test_chunk_planner_emits_slices_with_bounded_total_bytes(spark, giant_pdf):
     assert max(len(r["html"]) for r in rows) < 0.5 * len(giant_pdf)
 
 
+def test_overstated_count_ships_each_page_once(spark, giant_pdf):
+    """A ``/Count`` token far above the real page count (here in a comment
+    after the header) does not size the split: the planner reads the
+    parser's own page list, so it emits ceil(pages / chunk_pages) slice
+    rows carrying ~1x the document, not one full payload per missing
+    page."""
+    from paper2llm_spark.operators.parse import plan_chunks
+
+    forged = giant_pdf.replace(b"%PDF-1.4\n", b"%PDF-1.4\n% /Count 4000\n", 1)
+    df = spark.createDataFrame(
+        [("https://t/forged", "pdf", bytearray(forged))],
+        "url string, kind string, html binary",
+    )
+    rows = plan_chunks(df, chunk_pages=3).collect()
+    assert len(rows) == -(-N_PAGES // 3)
+    assert all(r["kind"] == "pdf_slice" for r in rows)
+    assert sorted(r["page_lo"] for r in rows) == list(range(0, N_PAGES, 3))
+    total = sum(len(r["html"]) for r in rows)
+    assert total <= 1.3 * len(forged), (total, len(forged))
+
+
 def test_unsliceable_payload_falls_back_to_full_chunks(spark):
-    """A payload that count_pages accepts but the slicer can't take apart
-    must still produce full-payload chunk rows (correctness never depends
-    on the slicer)."""
+    """A payload the slicer can't take apart ships once: one whole-payload
+    row, which the parse stage parses (or quarantines) as the fused stage
+    does. Its ``/Count`` token does not multiply the row."""
     from paper2llm_spark.operators.parse import plan_chunks
 
     fake = b"%PDF-1.4\n/Count 9\nno real object graph here"
@@ -74,6 +95,6 @@ def test_unsliceable_payload_falls_back_to_full_chunks(spark):
         "url string, kind string, html binary",
     )
     rows = plan_chunks(df, chunk_pages=4).collect()
-    assert len(rows) == 3  # 9 pages / 4 per chunk
-    assert all(r["kind"] == "pdf" for r in rows)
-    assert all(bytes(r["html"]) == fake for r in rows)
+    assert len(rows) == 1
+    assert rows[0]["kind"] == "pdf" and rows[0]["page_lo"] == 0
+    assert bytes(rows[0]["html"]) == fake

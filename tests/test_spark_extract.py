@@ -6,6 +6,7 @@ corpus"; target 100% of urls, both branches.
 
 from __future__ import annotations
 
+import re
 import uuid
 from datetime import datetime
 
@@ -13,11 +14,11 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from paper2llm_spark.operators.parse import DEFAULT_GIANT_BYTES
+from paper2llm_spark.operators.parse import DEFAULT_GIANT_BYTES, plan_chunks
 from paper2llm_spark.oracle.pipeline import convert_ocr_result
 from paper2llm_spark.pdf.fixtures import fixture_docs, golden_outputs
 from paper2llm_spark.pdf.parser import parse_pdf
-from paper2llm_spark.pdf.writer import write_pdf
+from paper2llm_spark.pdf.writer import layout_markdown_page, write_pdf
 from paper2llm_spark.plans.extract import extract_documents, routing_query
 from paper2llm_spark.schema import DOCUMENT_ROW, PAGES
 from paper2llm_spark.sources.pages import read_pages, with_bucket
@@ -283,6 +284,60 @@ def test_zero_page_pdf_emits_oracle_row(spark, giant_bytes):
                 "page_count", "image_references", "model", "bibtex",
                 "bibtex_key", "bibtex_formatted"):
         assert got[col] == golden[col], col
+
+
+def _paper(n_pages: int) -> bytes:
+    return write_pdf([
+        layout_markdown_page(f"## Section {i}\n\npage {i} text " + "x " * 40)
+        for i in range(n_pages)
+    ])
+
+
+def _forge_count(payload: bytes, count: int) -> bytes:
+    """A ``/Count`` token, in a comment after the header, that is not the
+    page count of the ``/Kids`` list the parser reads."""
+    return payload.replace(b"%PDF-1.4\n", b"%%PDF-1.4\n%% /Count %d\n" % count, 1)
+
+
+def _drop_contents(payload: bytes, *pages: int) -> bytes:
+    """The payload with the ``/Contents`` of ``pages`` removed (the writer
+    emits page objects in page order)."""
+    refs = list(re.finditer(rb"/Contents \d+ 0 R", payload))
+    for i in sorted(pages, reverse=True):
+        payload = payload[: refs[i].start()] + payload[refs[i].end():]
+    return payload
+
+
+MALFORMED_GIANTS = {
+    "count_low": (_forge_count(_paper(40), 20), None),
+    "count_high": (_forge_count(_paper(40), 4000), None),
+    "no_contents": (_drop_contents(_paper(48), 21), "page 21 has no /Contents"),
+    "two_bad_pages": (_drop_contents(_paper(48), 15, 40), "page 15 has no /Contents"),
+}
+
+
+@pytest.mark.parametrize("case", list(MALFORMED_GIANTS))
+def test_routes_agree_on_malformed_giants(spark, case):
+    """A PDF whose ``/Count`` token disagrees with its page list, or with
+    pages the parser rejects, converts on the chunk route (``giant_bytes=0,
+    chunk_pages=4``) as on the fused route, in every column but the run
+    lineage: no page is lost, a failure names the first bad page, and
+    the chunk plan ships each page's bytes once."""
+    payload, err = MALFORMED_GIANTS[case]
+    pages = spark.createDataFrame(
+        [(f"https://t/{case}", None, bytearray(payload), "", "en")], PAGES_SCHEMA
+    )
+    chunks = plan_chunks(pages.withColumn("kind", F.lit("pdf")), chunk_pages=4).collect()
+    assert sum(len(r["html"]) for r in chunks) <= 1.3 * len(payload)
+    fused = _by_url(extract_documents(pages))
+    chunked = _by_url(extract_documents(pages, giant_bytes=0, chunk_pages=4))
+    assert set(chunked) == set(fused)
+    assert not _same_but_lineage(chunked, fused)
+    (row,) = fused.values()
+    if err is None:
+        assert row["err"] is None and row["page_count"] == 40
+    else:
+        assert err in row["err"]
 
 
 def test_all_en_parsable_urls_present(placeholder_results):
