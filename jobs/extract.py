@@ -41,7 +41,6 @@ def main() -> None:
                     choices=["placeholder", "descriptions"])
     ap.add_argument("--buckets", type=int, default=64)
     ap.add_argument("--groups", type=int, default=8)
-    ap.add_argument("--chunk-pages", type=int, default=16)
     ap.add_argument("--langs", default="en")
     ap.add_argument("--cpus", type=int, default=None,
                     help="local[N] when no cluster master is provided")
@@ -62,7 +61,6 @@ def main() -> None:
         mode=args.mode,
         n_buckets=args.buckets,
         n_groups=args.groups,
-        chunk_pages=args.chunk_pages,
         langs=tuple(args.langs.split(",")),
     )
     stats = job.run(max_groups=args.max_groups)

@@ -1,12 +1,13 @@
-"""Document rows — one row builder for both routes, and the fused stage.
+"""Document rows — one parse, one row builder, and the fused stage.
 
 The reference converts a document in one call: OCR pages ->
 ``processMarkdown`` -> enhance -> split/bibtex (pdf-to-md.ts:22-170).
 The oracle mirrors that call as ``oracle.pipeline.convert_ocr_result``,
 and :func:`document_row` is that function, run on the parser's OCR
-struct. Both routes of plans/extract.py build every output row through
-it, so they are byte-identical to the oracle by construction
-(tests/test_spark_extract.py checks every output column):
+struct. Both routes of plans/extract.py parse every payload with
+:func:`parse_payload` and build every output row through
+:func:`document_row`, so they are byte-identical to the oracle by
+construction (tests/test_spark_extract.py checks every output column):
 
 * the fused document stage, :func:`convert_payloads` — every document
   whose payload fits one task (all but the giant-PDF tail) is parsed
@@ -62,13 +63,25 @@ def quarantine_row(lineage: dict, err: str) -> dict:
     return {**dict.fromkeys(DOCUMENT_COLUMNS), **lineage, "err": err}
 
 
+def parse_payload(kind: str, payload: bytes, page_lo: int = 0) -> tuple[dict | None, str | None]:
+    """The one parse of a payload, on both routes: ``(ocr, None)``, or
+    ``(None, err)`` when the parser raises (quarantine, S6). Any kind but
+    html is a PDF, or a page-range slice of one starting at ``page_lo``."""
+    try:
+        if kind == "html":
+            return html_to_ocr_result(payload), None
+        return parse_pdf(payload, index_offset=page_lo), None
+    except Exception as exc:  # quarantine (S6)
+        return None, f"{type(exc).__name__}: {exc}"
+
+
 def convert_payloads(df: DataFrame, mode: str) -> DataFrame:
     """(url, kind, html) rows -> one DOCUMENT_ROW row per document.
 
     A payload that fails to parse becomes a quarantine row. Lineage:
     ``bytes_in`` is the payload size, ``parse_partition`` the task's
-    partition and ``parse_wall_ms`` the time the batch spent parsing, as
-    on the giant route.
+    partition and ``parse_wall_ms`` the batch's seconds in
+    :func:`parse_payload`, as on the giant route.
     """
     check_mode(mode)
 
@@ -83,16 +96,12 @@ def convert_payloads(df: DataFrame, mode: str) -> DataFrame:
             parse_s = 0.0
             for url, kind, payload in zip(batch["url"], batch["kind"], batch["html"]):
                 payload = bytes(payload)
-                lineage = {"url": url, "bytes_in": len(payload), "parse_partition": partition_id}
                 t0 = time.monotonic()
-                try:
-                    ocr = html_to_ocr_result(payload) if kind == "html" else parse_pdf(payload)
-                except Exception as exc:  # quarantine (S6)
-                    rows.append(quarantine_row(lineage, f"{type(exc).__name__}: {exc}"))
-                    continue
-                finally:
-                    parse_s += time.monotonic() - t0
-                rows.append({**lineage, **document_row(ocr, mode)})
+                ocr, err = parse_payload(kind, payload)
+                parse_s += time.monotonic() - t0
+                lineage = {"url": url, "bytes_in": len(payload), "parse_partition": partition_id}
+                rows.append(quarantine_row(lineage, err) if ocr is None
+                            else {**lineage, **document_row(ocr, mode)})
             wall_ms = int(parse_s * 1000)
             for r in rows:
                 r["parse_wall_ms"] = wall_ms

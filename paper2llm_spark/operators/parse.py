@@ -9,11 +9,11 @@ by-number repartition between them:
    pages becomes one byte-sliced chunk row per page range, every other
    document one whole-payload row. AQE cannot see skew inside a UDF, so
    the split is explicit; each page's bytes are shipped once.
-2. :func:`parse_chunks` — the real parse (PDF layout parse or HTML
-   boilerplate strip), one call per chunk, producing one row per page
-   with only what conversion reads (index, markdown, image ids),
-   carrying per-partition lineage measurements (partition id, wall ms,
-   bytes in).
+2. :func:`parse_chunks` — the real parse, the fused stage's own
+   ``operators.document.parse_payload``, one call per chunk, producing
+   one row per page with only what conversion reads (index, markdown,
+   image ids), carrying per-partition lineage measurements (partition
+   id, parse ms, bytes in).
 
 ``operators.assemble.assemble_documents`` then groups the pages by url
 and converts each document. The pipeline (plans/extract.py) sends every
@@ -31,15 +31,13 @@ from __future__ import annotations
 
 import time
 from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..html_extract import html_to_ocr_result
-from ..pdf.parser import parse_pdf
 from ..schema import CHUNK_ROW, PAGE_ROW
+from .document import parse_payload
 
 DEFAULT_CHUNK_PAGES = 16
 
@@ -92,14 +90,15 @@ def parse_chunks(df: DataFrame) -> DataFrame:
     """Chunk rows -> page rows (PAGE_ROW schema). Pure function of the
     payload; task retries are safe (idempotent stage, SURVEY.md §4).
 
-    A PDF chunk is one ``parse_pdf`` call whose page indexes start at the
-    chunk's ``page_lo``, so they are document-absolute. A chunk that
-    fails to parse emits one row with its ``page_lo`` as ``page_index``
-    and the error in ``err``: reassembly reports the first failing
-    chunk's error, which is the first failing page's, as a whole-document
-    parse does. A document that parses to no pages (a PDF whose ``/Kids``
-    is empty) emits one row with ``page_index`` -1 and no ``err``, so the
-    url survives reassembly as the oracle's empty document."""
+    Each chunk is one ``operators.document.parse_payload`` call with the
+    chunk's ``page_lo`` as its first page index, so page indexes are
+    document-absolute. A chunk with no page emits one row: a parse error
+    carries its ``page_lo`` as ``page_index`` and the error in ``err``
+    (reassembly reports the first failing chunk's error, which is the
+    first failing page's, as a whole-document parse does); an empty
+    document (a PDF whose ``/Kids`` is empty) carries ``page_index`` -1
+    and the parser's ``model``, so the url survives reassembly as the
+    oracle's empty document."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
@@ -107,47 +106,27 @@ def parse_chunks(df: DataFrame) -> DataFrame:
         tc = TaskContext.get()
         partition_id = tc.partitionId() if tc else -1
 
-        for pdf_batch in batches:
-            t0 = time.monotonic()
-            rows: list[dict[str, Any]] = []
-
-            def no_page(url, index, nbytes, model, err):
-                rows.append({
-                    "url": url, "page_index": index, "page_markdown": None,
-                    "image_ids": None, "model": model,
-                    "err": err, "bytes_in": nbytes,
-                    "parse_partition": partition_id, "parse_wall_ms": 0,
-                })
-
+        for batch in batches:
+            rows = []
+            parse_s = 0.0
             for url, kind, lo, payload, nbytes in zip(
-                pdf_batch["url"], pdf_batch["kind"], pdf_batch["page_lo"],
-                pdf_batch["html"], pdf_batch["bytes_in"],
+                batch["url"], batch["kind"], batch["page_lo"], batch["html"], batch["bytes_in"],
             ):
-                payload = bytes(payload)
-                nbytes = int(nbytes)
-                try:
-                    if kind == "html":
-                        ocr = html_to_ocr_result(payload)
-                    else:
-                        ocr = parse_pdf(payload, index_offset=int(lo))
-                except Exception as exc:  # quarantine (S6)
-                    no_page(url, int(lo), nbytes, None, f"{type(exc).__name__}: {exc}")
+                t0 = time.monotonic()
+                ocr, err = parse_payload(kind, bytes(payload), int(lo))
+                parse_s += time.monotonic() - t0
+                lineage = {"url": url, "bytes_in": int(nbytes), "parse_partition": partition_id}
+                if ocr is None or not ocr["pages"]:
+                    rows.append({**lineage, "page_index": -1 if err is None else int(lo),
+                                 "page_markdown": None, "image_ids": None,
+                                 "model": None if ocr is None else ocr["model"], "err": err})
                     continue
-                if not ocr["pages"]:
-                    no_page(url, -1, nbytes, ocr["model"], None)
                 for page in ocr["pages"]:
-                    rows.append({
-                        "url": url,
-                        "page_index": page["index"],
-                        "page_markdown": page["markdown"],
-                        "image_ids": [im["id"] for im in page["images"]],
-                        "model": ocr["model"],
-                        "err": None,
-                        "bytes_in": nbytes,
-                        "parse_partition": partition_id,
-                        "parse_wall_ms": 0,
-                    })
-            wall_ms = int((time.monotonic() - t0) * 1000)
+                    rows.append({**lineage, "page_index": page["index"],
+                                 "page_markdown": page["markdown"],
+                                 "image_ids": [im["id"] for im in page["images"]],
+                                 "model": ocr["model"], "err": None})
+            wall_ms = int(parse_s * 1000)
             for r in rows:
                 r["parse_wall_ms"] = wall_ms
             yield pd.DataFrame(rows, columns=PAGE_ROW.fieldNames())

@@ -12,8 +12,9 @@ The DAG (SURVEY.md §3.4), two routes, decided on the driver::
       |- every url not routed (with none routed, the whole plan):
       |    fused document stage, ONE mapInPandas (operators/document.py):
       |    parse -> the oracle's convert_ocr_result, no shuffle
-      '- the routed urls, planned only when there are any (an IN list,
-         or a broadcast local relation when there are many):
+      '- the routed urls, planned only when there are any (the url set
+         rides as a broadcast local relation: the fused stage anti-joins
+         it, the tail semi-joins it):
            repartition(url) (SQL only: the scan stage runs no Python)
            -> max_by aggregate: latest crawl per url (same exchange)
            -> mapInPandas chunk-plan -> spread repartition(n, url, page_lo)
@@ -28,10 +29,12 @@ are made with), so they are byte-identical by construction (tested
 column by column).
 
 Resumability: documents hash into ``n_buckets`` by url; buckets are
-processed in ``n_groups`` commit groups. Each group appends its output,
-lineage rows, and a checkpoint row per bucket; a restarted run anti-joins
-completed buckets out of the input (north_rule requirement) so a killed
-job never reprocesses committed work.
+processed in ``n_groups`` commit groups. Each group overwrites its own
+buckets of the output (partitioned by ``bucket``), appends its lineage
+rows, and a checkpoint row per bucket; a restarted run filters completed
+buckets out of the input (north_rule requirement) so a killed job never
+reprocesses committed work, and a group interrupted before its
+checkpoint row is redone in place, never appended twice.
 """
 
 from __future__ import annotations
@@ -51,7 +54,9 @@ from ..operators.assemble import assemble_documents
 from ..operators.document import check_mode, convert_payloads
 from ..operators.parse import DEFAULT_CHUNK_PAGES, DEFAULT_GIANT_BYTES, chunked_pages
 from ..schema import CHECKPOINT
-from ..sources.pages import in_langs, payload_kind, read_pages, select_extractable, with_bucket
+from ..sources.pages import (
+    bucket_column, in_langs, payload_kind, read_pages, select_extractable, with_bucket,
+)
 
 OUTPUT_COLUMNS = [
     "url", "markdown", "main_content", "backmatter", "appendix", "title",
@@ -66,7 +71,7 @@ def extract_documents(
     mode: str = "placeholder",
     chunk_pages: int = DEFAULT_CHUNK_PAGES,
     langs: tuple[str, ...] = ("en",),
-    giant_bytes: int | None = None,
+    giant_bytes: int = DEFAULT_GIANT_BYTES,
 ) -> DataFrame:
     """pages table (url, warc_ts, html, text, lang) -> extracted rows.
 
@@ -74,37 +79,20 @@ def extract_documents(
     checkpointed runner below. It does run one job when called: the SQL
     :func:`routing_query`, collected on the driver (an unknown ``mode``
     fails before it). With no url routed, the plan is scan -> filter ->
-    the fused stage, with no union, join, exchange or per-page route.
+    the fused stage, with no union, join, exchange or per-page route;
+    otherwise both routes join the broadcast url set (one more job).
     """
     check_mode(mode)
-    if giant_bytes is None:
-        giant_bytes = DEFAULT_GIANT_BYTES
     selected = select_extractable(pages, langs=langs)
-    routed = [r.url for r in routing_query(pages, langs, giant_bytes).collect()]
-    if not routed:
+    routed = routing_query(pages, langs, giant_bytes).toArrow()
+    if not routed.num_rows:
         return convert_payloads(selected, mode)
-    small, tail = _split_routes(selected, routed)
+    url_set = F.broadcast(selected.sparkSession.createDataFrame(routed))
+    small = selected.join(url_set, "url", "left_anti")
+    tail = selected.join(url_set, "url", "left_semi")
     return convert_payloads(small, mode).unionByName(
         assemble_documents(chunked_pages(tail, chunk_pages), mode)
     )
-
-
-# Up to this many routed urls (a corpus's few giant PDFs) ride in the
-# plan as an IN list: no join and no job. A larger set becomes a
-# broadcast local relation, whose broadcast is one small job but which
-# plans in constant time, where an IN list costs ~1 ms a url to build.
-INLINE_URLS = 64
-
-
-def _split_routes(selected: DataFrame, routed: list[str]) -> tuple[DataFrame, DataFrame]:
-    """(fused-stage rows, per-page rows) of ``selected``."""
-    if len(routed) <= INLINE_URLS:
-        per_page = F.col("url").isin(routed)
-        return selected.filter(~per_page), selected.filter(per_page)
-    url_set = F.broadcast(selected.sparkSession.createDataFrame(
-        pa.table({"url": pa.array(routed, pa.string())})
-    ))
-    return selected.join(url_set, "url", "left_anti"), selected.join(url_set, "url", "left_semi")
 
 
 def routing_query(pages: DataFrame, langs: tuple[str, ...], giant_bytes: int) -> DataFrame:
@@ -241,7 +229,6 @@ class CheckpointedExtractJob:
         mode: str = "placeholder",
         n_buckets: int = 64,
         n_groups: int = 8,
-        chunk_pages: int = DEFAULT_CHUNK_PAGES,
         langs: tuple[str, ...] = ("en",),
     ):
         self.spark = spark
@@ -256,7 +243,6 @@ class CheckpointedExtractJob:
         self.mode = mode
         self.n_buckets = n_buckets
         self.n_groups = n_groups
-        self.chunk_pages = chunk_pages
         self.langs = langs
         self.out_path = os.path.join(output_dir, "extracted")
         self.lineage_path = os.path.join(output_dir, "lineage")
@@ -280,9 +266,19 @@ class CheckpointedExtractJob:
         """Append via the configured output format (the north_star's
         Iceberg table is this one flag on a cluster with the jars); if
         the source is missing locally, warn once and degrade the whole
-        job to parquet so every table of one run shares a format."""
+        job to parquet so every table of one run shares a format.
+
+        The output table alone is partitioned by ``bucket`` and written
+        with dynamic partition overwrite: a commit group replaces its own
+        buckets, so a group redone after an interruption that came before
+        its checkpoint row does not append its rows a second time."""
+        writer = df.write.mode("append")
+        if path == self.out_path:
+            writer = df.write.partitionBy("bucket").mode("overwrite").option(
+                "partitionOverwriteMode", "dynamic"
+            )
         try:
-            df.write.format(self.output_fmt).mode("append").save(path)
+            writer.format(self.output_fmt).save(path)
         except Exception as exc:
             if self.output_fmt == "parquet" or not _missing_data_source(exc):
                 raise
@@ -292,7 +288,7 @@ class CheckpointedExtractJob:
                 stacklevel=2,
             )
             self.output_fmt = "parquet"
-            df.write.format("parquet").mode("append").save(path)
+            writer.format("parquet").save(path)
 
     def _read_table(self, path: str) -> DataFrame:
         return self.spark.read.format(self.output_fmt).load(path)
@@ -377,12 +373,11 @@ class CheckpointedExtractJob:
             # a layout mismatch is wrong everywhere, so a bounded sample
             # catches it; on mismatch fall back to recomputing (losing
             # partition pruning, keeping correctness).
-            expected = F.pmod(F.xxhash64("url"), F.lit(self.n_buckets)).cast("int")
             bad = (
                 pages.select("url", "bucket").limit(1024)
                 .filter(
                     F.col("bucket").isNull()
-                    | (F.col("bucket") != expected)
+                    | (F.col("bucket") != bucket_column(self.n_buckets))
                 )
                 .limit(1)
                 .count()
@@ -413,13 +408,9 @@ class CheckpointedExtractJob:
         try:
             for group in groups:
                 subset = pages.filter(F.col("bucket").isin(group))
-                result = extract_documents(
-                    subset, mode=self.mode, chunk_pages=self.chunk_pages,
-                    langs=self.langs,
-                ).withColumn(
+                result = extract_documents(subset, mode=self.mode, langs=self.langs).withColumn(
                     # bucket is a pure function of url — recompute, don't join
-                    "bucket",
-                    F.pmod(F.xxhash64("url"), F.lit(self.n_buckets)).cast("int"),
+                    "bucket", bucket_column(self.n_buckets),
                 )
                 result = result.cache()
                 try:

@@ -32,8 +32,14 @@ def read_pages(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFram
     return spark.read.schema(PAGES).parquet(path)
 
 
+def bucket_column(n_buckets: int) -> Column:
+    """A row's logical bucket, ``pmod(xxhash64(url), n)``: the one
+    definition for :func:`with_bucket` and the checkpointed runner."""
+    return F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
+
+
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
-    """Attach the engine's logical bucket column: ``pmod(xxhash64(url), n)``.
+    """Attach the engine's logical bucket column (:func:`bucket_column`).
 
     Producers should write the pages table physically partitioned by this
     column (``.write.partitionBy("bucket")`` / Iceberg partition spec on
@@ -41,13 +47,8 @@ def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     the column is a physical partition, that filter partition-prunes the
     scan, so each commit group reads ONLY its buckets — at 100 TB the
     difference between ``n_groups`` full scans and one full scan total.
-    The definition must stay in lockstep with the runner's fallback
-    recompute (plans/extract.py), which is why it lives here as the single
-    source of truth.
     """
-    return df.withColumn(
-        "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
-    )
+    return df.withColumn("bucket", bucket_column(n_buckets))
 
 
 def payload_kind(html_col: Column) -> Column:

@@ -195,19 +195,13 @@ def _two_routes(out) -> tuple[list, list]:
 
 def test_assemble_is_single_shuffle(spark, pages_path):
     """Every document routed (``giant_bytes=0``): the two-route plan of
-    :func:`_two_routes`. The routed urls are few, so they ride in the
-    plan as an IN list: no join and no broadcast on either route."""
-    out = extract_documents(spark.read.parquet(pages_path), giant_bytes=0)
-    _two_routes(out)
-    plan = _physical(out)
-    assert "BroadcastExchange" not in plan and "Join" not in plan
-    assert " IN (https://t/" in plan or " INSET https://t/" in plan, plan
+    :func:`_two_routes`."""
+    _two_routes(extract_documents(spark.read.parquet(pages_path), giant_bytes=0))
 
 
-def test_routed_url_set_is_broadcast_local_relation(spark, pages_path, monkeypatch):
-    """Above ``INLINE_URLS`` routed urls, both routes join the url set as
-    a broadcast local relation: SQL only, no Python node, no scan."""
-    monkeypatch.setattr(extract, "INLINE_URLS", 0)
+def test_routed_url_set_is_broadcast_local_relation(spark, pages_path):
+    """However few urls are routed, both routes join the url set as a
+    broadcast local relation: SQL only, no Python node, no scan."""
     small_builds, giant_builds = _two_routes(
         extract_documents(spark.read.parquet(pages_path), giant_bytes=0)
     )

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from paper2llm_spark.pdf.fixtures import golden_outputs
 from paper2llm_spark.plans.extract import CheckpointedExtractJob
 
@@ -96,6 +98,7 @@ def test_output_format_seam_dispatches_on_fmt(spark, fixture_pages_path, tmp_pat
     checkpoint, stage metrics) land as ORC, read back through the same
     seam, and resume sees the ORC checkpoint."""
     import glob
+    import os
 
     out_dir = str(tmp_path / "job_orc")
     job = CheckpointedExtractJob(
@@ -106,7 +109,8 @@ def test_output_format_seam_dispatches_on_fmt(spark, fixture_pages_path, tmp_pat
     assert job.output_fmt == "orc"
     for path in (job.out_path, job.lineage_path, job.checkpoint_path,
                  job.stage_metrics_path):
-        files = glob.glob(f"{path}/*")
+        # recursive: the output table's files sit under bucket=N/
+        files = [f for f in glob.glob(f"{path}/**", recursive=True) if os.path.isfile(f)]
         assert any(f.endswith(".orc") for f in files), path
         assert not any(f.endswith(".parquet") for f in files), path
     n = spark.read.orc(job.out_path).count()
@@ -183,6 +187,50 @@ def test_cooperative_cancel_then_resume(spark, fixture_pages_path, tmp_path):
     assert job2.completed_buckets() == set(range(8))
     urls = [r["url"] for r in spark.read.parquet(job.out_path).select("url").collect()]
     assert len(urls) == len(set(urls))
+
+
+@pytest.mark.parametrize(
+    "exc", [Exception("Job cancelled"), RuntimeError("lineage table unreachable")],
+    ids=["cancel", "crash"],
+)
+def test_interrupted_group_resumes_without_duplicates(
+    spark, fixture_pages_path, tmp_path, monkeypatch, exc
+):
+    """An interruption between a commit group's output write and its
+    checkpoint row — a cooperative cancel, which ``run()`` reports, or a
+    crash, which it raises — leaves the group without a checkpoint row;
+    a fresh job's resume redoes it in place instead of appending its
+    rows again."""
+    out_dir = str(tmp_path / "job_interrupted")
+    job = CheckpointedExtractJob(spark, fixture_pages_path, out_dir, n_buckets=8, n_groups=4)
+    write = job._write
+
+    def failing_write(df, path):
+        # the first group's lineage write: its output is already written
+        if path == job.lineage_path:
+            raise exc
+        write(df, path)
+
+    monkeypatch.setattr(job, "_write", failing_write)
+    if isinstance(exc, RuntimeError):
+        with pytest.raises(RuntimeError, match="lineage table unreachable"):
+            job.run()
+    else:
+        res = job.run()
+        assert res["cancelled"] and res["groups_processed"] == 0
+    assert job.completed_buckets() == set()
+    assert spark.read.parquet(job.out_path).count() > 0
+
+    job2 = CheckpointedExtractJob(spark, fixture_pages_path, out_dir, n_buckets=8, n_groups=4)
+    res2 = job2.run()
+    assert res2["groups_processed"] == 4 and not res2["cancelled"]
+    assert job2.completed_buckets() == set(range(8))
+    final = spark.read.parquet(job.out_path)
+    urls = [r["url"] for r in final.select("url").collect()]
+    assert len(urls) == len(set(urls)), "resume must not duplicate any url"
+    got = {r["url"]: r["markdown"] for r in final.collect()}
+    for url, g in golden_outputs().items():
+        assert got[url] == g["markdown"], url
 
 
 def test_mismatched_bucket_column_is_recomputed_not_trusted(
