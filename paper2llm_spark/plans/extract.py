@@ -71,7 +71,7 @@ def extract_documents(
     mode: str = "placeholder",
     chunk_pages: int = DEFAULT_CHUNK_PAGES,
     langs: tuple[str, ...] = ("en",),
-    giant_bytes: int = DEFAULT_GIANT_BYTES,
+    giant_bytes: int | None = None,
 ) -> DataFrame:
     """pages table (url, warc_ts, html, text, lang) -> extracted rows.
 
@@ -84,6 +84,7 @@ def extract_documents(
     """
     check_mode(mode)
     selected = select_extractable(pages, langs=langs)
+    giant_bytes = DEFAULT_GIANT_BYTES if giant_bytes is None else giant_bytes
     routed = routing_query(pages, langs, giant_bytes).toArrow()
     if not routed.num_rows:
         return convert_payloads(selected, mode)
@@ -263,19 +264,20 @@ class CheckpointedExtractJob:
 
     # -- output format seam ---------------------------------------------------
     def _write(self, df: DataFrame, path: str) -> None:
-        """Append via the configured output format (the north_star's
+        """Write via the configured output format (the north_star's
         Iceberg table is this one flag on a cluster with the jars); if
         the source is missing locally, warn once and degrade the whole
         job to parquet so every table of one run shares a format.
 
-        The output table alone is partitioned by ``bucket`` and written
-        with dynamic partition overwrite: a commit group replaces its own
-        buckets, so a group redone after an interruption that came before
-        its checkpoint row does not append its rows a second time."""
+        Every table appends but the output, which is partitioned by
+        ``bucket`` and overwrites only the buckets it holds, so a group
+        redone before its checkpoint row is not appended twice: parquet,
+        orc and delta read ``partitionOverwriteMode``, Iceberg only
+        ``overwrite-mode`` (without it, an overwrite of the whole table)."""
         writer = df.write.mode("append")
         if path == self.out_path:
-            writer = df.write.partitionBy("bucket").mode("overwrite").option(
-                "partitionOverwriteMode", "dynamic"
+            writer = df.write.partitionBy("bucket").mode("overwrite").options(
+                **{"partitionOverwriteMode": "dynamic", "overwrite-mode": "dynamic"}
             )
         try:
             writer.format(self.output_fmt).save(path)
@@ -375,10 +377,7 @@ class CheckpointedExtractJob:
             # partition pruning, keeping correctness).
             bad = (
                 pages.select("url", "bucket").limit(1024)
-                .filter(
-                    F.col("bucket").isNull()
-                    | (F.col("bucket") != bucket_column(self.n_buckets))
-                )
+                .filter(~F.col("bucket").eqNullSafe(bucket_column(self.n_buckets)))
                 .limit(1)
                 .count()
             )
